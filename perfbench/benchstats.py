@@ -28,15 +28,23 @@ def failure_counts(ok_flags):
     return attempted, failed, (failed / attempted if attempted else 1.0)
 
 
+# The two timed parts of each workload's op, gated as op_a and op_b.
+PARTS = {
+    "kv_nearsync": ("verify", "range_check"),  # full verify; one range check
+    "corpus_dedup": ("minhash", "drop"),  # clearCaches + minhashNearDup; dropNearDuplicates
+}
+
+
 def end_to_end(raw):
-    """The end-to-end metrics of an untraced run's raw samples. Latency
-    and rate use the ops whose outputs checked correct."""
-    good = [(ms, b) for ms, b, ok in zip(raw["op_ms"], raw["op_bytes"], raw["op_ok"]) if ok]
-    ms = [m for m, _ in good]
+    """The end-to-end metrics of an untraced run's raw samples. Part
+    latencies are over every measured op; a failed op makes the run
+    incorrect whatever its latency."""
+    a, b = PARTS[raw["workload"]]
+    parts = raw["parts_ms"]
     return {
         "setup_s": statistics.median(raw["setup_s"]),
-        "op_p50_ms": statistics.median(ms) if ms else float("nan"),
-        "work_MBps": (sum(b for _, b in good) / 1e6) / (sum(ms) / 1e3) if ms else float("nan"),
+        "op_a_p50_ms": statistics.median(parts[a]) if parts.get(a) else float("nan"),
+        "op_b_p50_ms": statistics.median(parts[b]) if parts.get(b) else float("nan"),
         "peak_heap_MB": max(raw["heap_after_gc_MB"]),
     }
 

@@ -32,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import benchstats  # noqa: E402
 
 WORKLOADS = ("kv_nearsync", "corpus_dedup")
-END_TO_END = {"setup_s": "s", "op_p50_ms": "ms", "work_MBps": "MB/s", "peak_heap_MB": "MB"}
+END_TO_END = {"setup_s": "s", "op_a_p50_ms": "ms", "op_b_p50_ms": "ms", "peak_heap_MB": "MB"}
 
 SPAN_COUNTERS = (("self_ms", "ms"), ("plan_ms", "ms"), ("jobs", "count"), ("tasks", "count"),
                  ("task_cpu_s", "s"), ("gc_s", "s"), ("shuffle_write_MB", "MB"),
@@ -57,7 +57,11 @@ JVM_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke", "java.base/jav
              "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
              "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
              "java.base/sun.util.calendar"]
-HEAP = "3g"
+HEAP = "2g"
+# Parallel GC with a fixed 1.5 GB young generation: an op allocates at
+# most about 1.7 GB, so it meets at most one young collection, and no
+# adaptive sizing changes that from run to run.
+GC = ["-XX:+UseParallelGC", "-Xmn1536m", "-XX:-UseAdaptiveSizePolicy", "-XX:SurvivorRatio=6"]
 RUN_TIMEOUT_S = 170
 
 
@@ -140,7 +144,8 @@ def run_jvm(classes, work, args):
     log = os.path.join(work, "jvm.log")
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp)
-    cmd = (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+UseG1GC", f"-Djava.io.tmpdir={tmp}"]
+    cmd = (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}"] + GC
+           + ["-XX:+AlwaysPreTouch", "-XX:+UseTransparentHugePages", f"-Djava.io.tmpdir={tmp}"]
            + jvm_opens()
            + ["-cp", classpath(classes),
               "graftbench.Main", "--workload", args.workload, "--seed", str(args.seed),
@@ -181,24 +186,27 @@ def report(raw, args):
     if not raw.get("op_ms"):
         return
     e2e = benchstats.end_to_end(raw)
-    ok_ms = [m for m, ok in zip(raw["op_ms"], raw["op_ok"]) if ok]
-    lines = [("setup_s", e2e["setup_s"], "s", f"median of {len(raw['setup_s'])} set-ups"),
+    a, b = benchstats.PARTS[w]
+    parts = raw["parts_ms"]
+    lines = [("setup_s", e2e["setup_s"], "s",
+              f"median of {len(raw['setup_s'])} JIT-warm set-ups; the cold first took {raw['setup_cold_s']:.2f} s"),
              ("failed_ratio", ratio, "ratio", f"{failed}/{attempted}"),
-             ("peak_heap_MB", e2e["peak_heap_MB"], "MB", "highest used heap after a full GC")]
+             ("peak_heap_MB", e2e["peak_heap_MB"], "MB", "highest used heap after a full GC"),
+             ("op_a_p50_ms", e2e["op_a_p50_ms"], "ms", f"median '{a}', n={len(parts[a])}"),
+             ("op_b_p50_ms", e2e["op_b_p50_ms"], "ms", f"median '{b}', n={len(parts[b])}")]
     if w == "kv_nearsync":
-        parts = raw["parts_ms"]
-        verify, ranges = parts["verify"], parts["range_check"]
-        lines.append(("verify_p50_s", statistics.median(verify) / 1e3, "s", f"n={len(verify)}"))
-        lines.append(("verify_MBps", raw["op_bytes"][0] / 1e6 / (statistics.median(verify) / 1e3), "MB/s",
+        verify_s = e2e["op_a_p50_ms"] / 1e3
+        lines.append(("verify_p50_s", verify_s, "s", "= op_a_p50_ms"))
+        lines.append(("verify_MBps", raw["op_bytes"][0] / 1e6 / verify_s, "MB/s",
                       "both clusters' file bytes over the median verify"))
-        lines.append(("range_check_p50_ms", statistics.median(ranges), "ms", f"n={len(ranges)}"))
-        t = benchstats.tail(ranges)
+        lines.append(("range_check_p50_ms", e2e["op_b_p50_ms"], "ms", "= op_b_p50_ms"))
+        t = benchstats.tail(parts[b])
         lines.append(("range_check_tail_ms", t[1] if t else float("nan"), "ms",
-                      f"p{t[0]:g} of n={t[2]}, {t[3]} beyond" if t else f"n={len(ranges)} < 20, no tail"))
+                      f"p{t[0]:g} of n={t[2]}, {t[3]} beyond" if t else f"n={len(parts[b])} < 20, no tail"))
     else:
-        docs = raw["sizes"]["docs"]
-        lines.append(("dedup_p50_s", e2e["op_p50_ms"] / 1e3, "s", f"n={len(ok_ms)}"))
-        lines.append(("dedup_docs_per_s", docs * len(ok_ms) / (sum(ok_ms) / 1e3), "docs/s", ""))
+        dedup_s = statistics.median(raw["op_ms"]) / 1e3
+        lines.append(("dedup_p50_s", dedup_s, "s", f"whole op, n={attempted}"))
+        lines.append(("dedup_docs_per_s", raw["sizes"]["docs"] / dedup_s, "docs/s", "over the median op"))
     for name, v, unit, note in lines:
         print(f"  {w}.{name} = {v:.6g} {unit}  {note}".rstrip())
 
@@ -234,8 +242,8 @@ def main():
         for n, _ in PER_LAYER:
             print(f"  {args.workload}.{n} = {layers.get(n, 0.0):.6g}")
         print(f"  spans: {dump}")
-        self_ok = layers.get("trace.self_share", 0.0) <= 1.0 + 1e-9
-        print(f"  self times sum to {100 * layers.get('trace.self_share', 0.0):.2f}% of op wall time"
+        self_ok = layers.get("trace.self_share", 0.0) <= 1.0
+        print(f"  self times sum to {100 * layers.get('trace.self_share', 0.0):.2f}% of the loop's op time"
               f" ({'ok' if self_ok else 'EXCEEDS wall'})")
         correct = correct and self_ok
     else:

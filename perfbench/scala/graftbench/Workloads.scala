@@ -39,7 +39,16 @@ trait Workload {
   val parts = scala.collection.mutable.LinkedHashMap.empty[String, scala.collection.mutable.ArrayBuffer[Double]]
   def close(): Unit = ()
 
+  protected def timed[T](part: String)(body: => T): T = {
+    val t0 = System.nanoTime()
+    try body finally parts.getOrElseUpdate(part, scala.collection.mutable.ArrayBuffer.empty) +=
+      (System.nanoTime() - t0) / 1e6
+  }
+
+  /** The set-up's warm-up op has index -1; layer ratios count only
+    * traced ops of the measured loop, so they skip it. */
   protected def warmUp(): Unit = op(-1).check()
+  protected def counting(i: Int, ctx: Ctx): Boolean = ctx.tracer.enabled && i >= 0
 }
 
 object Workloads {
@@ -73,7 +82,7 @@ final case class Verdict(src: (Long, Long, Long), dst: (Long, Long, Long), match
   *     through loopback `KVBinServer` endpoints; the last range of each
   *     op holds planted keys and is also diffed, the others hold none.
   * Each part is also timed on its own ([[Workload.parts]]). */
-class NearSync(ctx: Ctx, keys: Long = 150000L, regions: Int = 16,
+class NearSync(ctx: Ctx, keys: Long = 100000L, regions: Int = 16,
                width: Long = 4096L, rangesPerOp: Int = 10) extends Workload {
   import ctx.spark
   val opName = "verify_and_range_checks"
@@ -82,7 +91,7 @@ class NearSync(ctx: Ctx, keys: Long = 150000L, regions: Int = 16,
   val dstDir: String = new File(ctx.work, "dst").getPath
   private var servers: Seq[KVBinServer] = Nil
   private var clusterBytes = 0L
-  // accumulated over the traced ops only
+  // accumulated over the measured traced ops only
   private var readBytes, scans, checksums, rediffRows, diffKeys = 0L
 
   def sizes: Map[String, Double] = Map(
@@ -109,12 +118,6 @@ class NearSync(ctx: Ctx, keys: Long = 150000L, regions: Int = 16,
 
   override def close(): Unit = servers.foreach(_.close())
 
-  private def timed[T](part: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    try body finally parts.getOrElseUpdate(part, scala.collection.mutable.ArrayBuffer.empty) +=
-      (System.nanoTime() - t0) / 1e6
-  }
-
   private def verdict(src: DataFrame, dst: DataFrame): Verdict = {
     val r = ctx.span("Checksum.verdict")(Checksum.verdict(src, dst).collect().head)
     def side(p: String) = (r.getAs[Long](s"${p}_crc64_xor"), r.getAs[Long](s"${p}_total_kvs"),
@@ -134,7 +137,7 @@ class NearSync(ctx: Ctx, keys: Long = 150000L, regions: Int = 16,
       val d = Diff.checksumPrunedDiff(a, b)
       (d, d.collect())
     }
-    if (ctx.tracer.enabled && countRows) {
+    if (countRows) {
       import org.apache.spark.sql.catalyst.plans.FullOuter
       import org.apache.spark.sql.execution.joins.BaseJoinExec
       rediffRows += PlanRows.of(d) {
@@ -175,12 +178,13 @@ class NearSync(ctx: Ctx, keys: Long = 150000L, regions: Int = 16,
   def op(i: Int): Done = {
     val r0 = Tracer.fsRead()
     val (src, dst) = (KVBin.read(spark, srcDir), KVBin.read(spark, dstDir))
-    val (v, rows) = timed("verify")((verdict(src, dst), prunedDiff(src, dst, countRows = true)._2))
-    if (ctx.tracer.enabled) readBytes += Tracer.fsRead() - r0
+    val counted = counting(i, ctx)
+    val (v, rows) = timed("verify")((verdict(src, dst), prunedDiff(src, dst, countRows = counted)._2))
+    if (counted) readBytes += Tracer.fsRead() - r0
 
     val (scans0, checksums0) = serverRequests
     val ranges = (1 to rangesPerOp).map(j => rangeCheck(rangeStart(hit = j == rangesPerOp)))
-    if (ctx.tracer.enabled) {
+    if (counted) {
       val (s1, c1) = serverRequests
       scans += s1 - scans0
       checksums += c1 - checksums0
@@ -219,7 +223,9 @@ class NearSync(ctx: Ctx, keys: Long = 150000L, regions: Int = 16,
 
 /** Generated corpus with planted near-duplicate clusters: clear the
   * memos, MinHash near-dup pairs, then drop near duplicates on the same
-  * frame (which may reuse the first call's shingle-index memo). */
+  * frame (which may reuse the first call's shingle-index memo). The two
+  * parts are timed on their own: "minhash" (clear + minhashNearDup, cold)
+  * and "drop" (dropNearDuplicates after it). */
 class CorpusDedup(ctx: Ctx, docs: Int = 1500, tau: Double = 0.7) extends Workload {
   import ctx.spark
   val opName = "dedup"
@@ -227,6 +233,7 @@ class CorpusDedup(ctx: Ctx, docs: Int = 1500, tau: Double = 0.7) extends Workloa
     minMemberJaccard = tau + 0.1)
   val dir: String = new File(ctx.work, "corpus").getPath
   private val unclustered = corpus.docs.map(_._1).filterNot(corpus.members)
+  // accumulated over the measured traced ops only
   private var touches, candidates, verified = 0L
 
   def sizes: Map[String, Double] = Map("docs" -> docs.toDouble,
@@ -246,16 +253,18 @@ class CorpusDedup(ctx: Ctx, docs: Int = 1500, tau: Double = 0.7) extends Workloa
 
   def op(i: Int): Done = {
     val frame = spark.read.parquet(dir)
-    ctx.span("Dedup.clearCaches")(Dedup.clearCaches())
     val t0 = MemoStats.touches.get
-    val (pairsDf, pairs) = ctx.span("Dedup.minhashNearDup") {
-      val p = Dedup.minhashNearDup(frame, "text", "id", tau)
-      (p, p.collect())
+    val (pairsDf, pairs) = timed("minhash") {
+      ctx.span("Dedup.clearCaches")(Dedup.clearCaches())
+      ctx.span("Dedup.minhashNearDup") {
+        val p = Dedup.minhashNearDup(frame, "text", "id", tau)
+        (p, p.collect())
+      }
     }
-    val kept = ctx.span("Dedup.dropNearDuplicates") {
+    val kept = timed("drop")(ctx.span("Dedup.dropNearDuplicates") {
       Dedup.dropNearDuplicates(frame, "text", "id", tau).select("id").collect()
-    }
-    if (ctx.tracer.enabled) {
+    })
+    if (counting(i, ctx)) {
       import org.apache.spark.sql.execution.aggregate.HashAggregateExec
       touches += MemoStats.touches.get - t0
       verified += pairs.length

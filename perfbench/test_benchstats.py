@@ -4,6 +4,7 @@
 """
 
 import json
+import math
 import os
 import unittest
 
@@ -43,14 +44,23 @@ class FailureCounting(unittest.TestCase):
     def test_nothing_attempted_is_all_failed(self):
         self.assertEqual(benchstats.failure_counts([]), (0, 0, 1.0))
 
-    def test_failed_ops_are_left_out_of_latency(self):
-        raw = {"setup_s": [3.0, 1.0, 2.0], "heap_after_gc_MB": [10.0, 12.0],
-               "op_ms": [100.0, 5.0, 300.0], "op_bytes": [1e6, 0.0, 1e6], "op_ok": [True, False, True]}
-        e = benchstats.end_to_end(raw)
-        self.assertEqual(e["setup_s"], 2.0)
-        self.assertEqual(e["op_p50_ms"], 200.0)
-        self.assertAlmostEqual(e["work_MBps"], 2.0 / 0.4)
-        self.assertEqual(e["peak_heap_MB"], 12.0)
+
+
+class EndToEnd(unittest.TestCase):
+    def test_parts_map_to_op_a_and_op_b(self):
+        raw = {"workload": "kv_nearsync", "setup_s": [3.0, 1.0, 2.0], "heap_after_gc_MB": [10.0, 12.0],
+               "parts_ms": {"verify": [100.0, 300.0], "range_check": [5.0, 7.0, 6.0]}}
+        self.assertEqual(benchstats.end_to_end(raw),
+                         {"setup_s": 2.0, "op_a_p50_ms": 200.0, "op_b_p50_ms": 6.0, "peak_heap_MB": 12.0})
+
+    def test_every_workload_has_two_parts(self):
+        self.assertEqual(set(benchstats.PARTS), set(run.WORKLOADS))
+        self.assertTrue(all(len(set(p)) == 2 for p in benchstats.PARTS.values()))
+
+    def test_a_missing_part_is_not_a_number(self):
+        raw = {"workload": "corpus_dedup", "setup_s": [1.0], "heap_after_gc_MB": [1.0],
+               "parts_ms": {"minhash": [4.0]}}
+        self.assertTrue(math.isnan(benchstats.end_to_end(raw)["op_b_p50_ms"]))
 
 
 class BenchmarkJson(unittest.TestCase):
