@@ -2,80 +2,23 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Session-scoped memo of corpus row counts keyed by the canonicalized
-  * logical plan — the "chooser stats piggyback" (r13 verdict task 6):
-  * every occupancy-adaptive chooser (MinHash banding, SRP band width,
-  * semantic-dedup auto-k, the ED-Join budget) needs n = |corpus|, and
-  * ~6 entry points each paid one extra count() ACTION per invocation
-  * even though a session's gates run over the same few corpora. One
-  * count per (session, corpus plan) now serves the whole family.
-  *
-  * Same key discipline and lifetime rules as [[Dedup]]'s frame memos
-  * (a file-backed plan canonicalizes to its root path + schema, so an
-  * in-place rewrite within one JVM is NOT detected — callers that
-  * mutate inputs mid-session disable caching or clear after the
-  * rewrite), same session pruning, same bound; [[Dedup.clearCaches]]
-  * clears this memo too. The memo saves scheduler round-trips and
-  * input re-scans, never a shuffle — a count is scalar-wide — so it
-  * is a latency fix, not a correctness-relevant rewrite: the cached
-  * value is exactly what the dropped job would have produced. */
+/** Session-scoped memo of corpus row counts — the "chooser stats
+  * piggyback": every occupancy-adaptive chooser (MinHash banding, SRP
+  * band width, semantic-dedup auto-k, the ED-Join budget) needs
+  * n = |corpus|, and ~6 entry points would each pay one extra count()
+  * ACTION per invocation even though a session's gates run over the
+  * same few corpora. One count per (session, corpus plan, input
+  * fingerprint) serves the whole family; the key and lifetime rules
+  * are [[Memo]]'s, so a rewritten or appended input is counted afresh,
+  * and [[Dedup.clearCaches]] clears this memo too. The memo saves
+  * scheduler round-trips and input re-scans, never a shuffle — a count
+  * is scalar-wide — so the cached value is exactly what the dropped
+  * job would have produced. */
 object CorpusCount {
-  /** Opt-out shared with the frame memos' rationale: stale counts are
-    * only possible via in-place input rewrites the plan key can't see. */
-  @volatile var cachingEnabled: Boolean = true
+  private val memo = new Memo[Long](32)
 
-  private val maxEntries = 32
-  private val cache = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[(String, String)]), Long]
+  /** `df.count()`, memoized by [[Memo]]. */
+  def of(df: DataFrame): Long = memo(df)(df.count())
 
-  /** LIVE epochs of every endpoints-backed kvbin table in the plan:
-    * a wire table canonicalizes identically across appends (no
-    * path/mtime in the plan), so the memo key carries each one's
-    * (table_id, generation) — one O(1) POLL per table per lookup,
-    * still far cheaper than the count job the memo saves. Path-backed
-    * plans keep the documented in-place-rewrite caveat. */
-  private def kvbinEpochs(df: DataFrame): Seq[(String, String)] =
-    df.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-        r.table match {
-          case t: graft.sources.kvbin.KVBinTable => t.liveEpoch
-          case _ => None
-        }
-    }.flatten
-
-  /** `df.count()`, memoized per (session, canonicalized plan, live
-    * kvbin epochs). The count job runs OUTSIDE the lock; a rare
-    * concurrent double-count is benign (both produce the same number,
-    * one wins the slot). */
-  def of(df: DataFrame): Long = {
-    if (!cachingEnabled) return df.count()
-    MemoStats.touch()
-    // a briefly unreachable store must DEGRADE the memo (uncached
-    // count — the count job itself will retry/fail with the query's
-    // own semantics), not fail the query from inside key computation:
-    // the epoch POLL is a cache-freshness probe, not part of the
-    // query's contract (r15 advice)
-    val epochs =
-      try kvbinEpochs(df)
-      catch { case scala.util.control.NonFatal(_) => return df.count() }
-    val key = (df.sparkSession, df.queryExecution.logical.canonicalized,
-      epochs)
-    cache.synchronized {
-      cache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-      cache.get(key)
-    } match {
-      case Some(n) => n
-      case None =>
-        val n = df.count()
-        cache.synchronized {
-          val out = cache.getOrElseUpdate(key, n)
-          while (cache.size > maxEntries) cache.remove(cache.head._1)
-          out
-        }
-    }
-  }
-
-  def clear(): Unit = cache.synchronized { cache.clear() }
+  def clear(): Unit = memo.clear()
 }

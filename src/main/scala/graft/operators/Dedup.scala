@@ -80,46 +80,15 @@ object Dedup {
     * reference (the round-2 jaccard join recomputed it 4×, which was
     * most of its bench time).
     *
-    * Cached per (corpus plan, textCol, idCol, n) within the JVM: a
-    * curation pipeline runs several dedup stages (exact-Jaccard join,
+    * Memoized per (corpus, textCol, idCol, n) by [[Memo]]: a curation
+    * pipeline runs several dedup stages (exact-Jaccard join,
     * MinHash-LSH, connected components) over ONE corpus, and at scale
     * you materialize the index once and fan the stages out from it —
     * the same materialize-once policy KVSnapshot applies to the KV
-    * snapshots. The key is (session, CANONICALIZED LOGICAL PLAN, params):
-    * plan equality is structural (for a LocalRelation that includes the
-    * rows themselves; for file reads it is the root path + schema — like
-    * KVSnapshot's cache, an in-place rewrite of the same path within one
-    * JVM is NOT detected), and keying by session plus pruning entries of
-    * stopped sessions means a restarted session can never be served a
-    * checkpoint whose blocks died with the old context. The index build
-    * runs OUTSIDE the cache lock (it is a Spark job); a rare concurrent
-    * double-build is benign — one result wins, the other is garbage
-    * collected. */
+    * snapshots. */
   def hashedShingleIndex(docs: DataFrame, textCol: String, idCol: String,
-                         n: Int): DataFrame = {
-    if (!cachingEnabled) return buildShingleIndex(docs, textCol, idCol, n)
-    MemoStats.touch()
-    val session = docs.sparkSession
-    val key = (session, docs.queryExecution.logical.canonicalized, textCol, idCol, n)
-    indexCache.synchronized {
-      indexCache.filterInPlace { case ((s, _, _, _, _), _) => !s.sparkContext.isStopped }
-      indexCache.get(key)
-    } match {
-      case Some(cached) => cached
-      case None =>
-        val built = buildShingleIndex(docs, textCol, idCol, n)
-        indexCache.synchronized {
-          val out = indexCache.getOrElseUpdate(key, built)
-          // bound the cache: a long-lived session deduping many corpora
-          // must not pin every index's checkpoint blocks forever —
-          // dropping the oldest entries releases our reference and the
-          // ContextCleaner reclaims the blocks once the frame is GC'd
-          while (indexCache.size > maxCachedIndexes)
-            indexCache.remove(indexCache.head._1)
-          out
-        }
-    }
-  }
+                         n: Int): DataFrame =
+    indexMemo(docs, textCol, idCol, n)(buildShingleIndex(docs, textCol, idCol, n))
 
   private def buildShingleIndex(docs: DataFrame, textCol: String, idCol: String,
                                 n: Int): DataFrame =
@@ -160,40 +129,26 @@ object Dedup {
     math.max(dp, splits)
   }
 
-  private val maxCachedIndexes = 8
-  private type FrameKey = (org.apache.spark.sql.SparkSession,
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, String, Int)
-  private val indexCache =
-    scala.collection.mutable.LinkedHashMap.empty[FrameKey, DataFrame]
-
-  /** Caching opt-out for both memo maps ([[indexCache]] and the verified-
-    * pair cache): the keys canonicalize a FILE-BACKED plan to its root
-    * path + schema, so rewriting a path in place within one JVM would be
-    * served stale frames — a caller that mutates its inputs mid-session
-    * disables caching (or calls [[clearCaches]] after the rewrite).
-    * Checkpoint blocks are also non-replicated: after losing an executor,
+  /** The shingle-index memo ([[hashedShingleIndex]]) and the
+    * verified-pair memo ([[cachedPairs]]): a curation pipeline consumes
+    * ONE corpus's verified similarity pairs from several operators (the
+    * thresholded join itself, connected components over it), and at
+    * scale you materialize the pair set once and fan out. Checkpoint
+    * blocks are non-replicated: after losing an executor,
     * [[clearCaches]] is the recovery hook. */
-  @volatile var cachingEnabled: Boolean = true
+  private val indexMemo = new Memo[DataFrame](8)
+  private val pairMemo = new Memo[DataFrame](8)
 
-  /** Drop every memoized shingle index and verified-pair frame. The
-    * dropped frames' checkpoint blocks are reclaimed by the
+  /** Drop every memoized shingle index, verified-pair frame and corpus
+    * count. The dropped frames' checkpoint blocks are reclaimed by the
     * ContextCleaner once unreferenced; in-flight consumers of a
     * previously returned frame are unaffected (they hold their own
     * reference). */
   def clearCaches(): Unit = {
-    indexCache.synchronized { indexCache.clear() }
-    pairCache.synchronized { pairCache.clear() }
+    indexMemo.clear()
+    pairMemo.clear()
     CorpusCount.clear()
   }
-
-  /** The verified-pair cache, same policy and lifetime rules as
-    * [[indexCache]]: a curation pipeline consumes ONE corpus's verified
-    * similarity pairs from several operators (the thresholded join
-    * itself, connected components over it), and at scale you materialize
-    * the pair set once and fan out. Keyed by the same canonicalized
-    * corpus plan plus the join parameters (tag). */
-  private val pairCache =
-    scala.collection.mutable.LinkedHashMap.empty[(FrameKey, String), DataFrame]
 
   /** MinHash signatures: k independent permutation-minima approximated
     * by `min over shingles of xxhash64(seed_j, hashedShingle)`, computed
@@ -329,7 +284,7 @@ object Dedup {
   def jaccardJoin(docs: DataFrame, textCol: String, idCol: String,
                   threshold: Double, n: Int = 3,
                   maxDf: Int = Int.MaxValue): DataFrame =
-    cachedPairs(docs, textCol, idCol, n, s"jac:$threshold:$maxDf") { () =>
+    cachedPairs(docs, textCol, idCol, n, s"jac:$threshold:$maxDf") {
       val (inter, sz) = prunedIntersections(docs, textCol, idCol, n, maxDf)
       jaccardFromCounts(inter, sz, threshold)
     }
@@ -358,32 +313,13 @@ object Dedup {
     (inter, sz)
   }
 
-  /** [[pairCache]] lookup-or-build for a verified-pair frame keyed by
-    * the canonicalized corpus plan + a parameter `tag` — the caching
-    * policy every pair-producing operator shares. */
+  /** [[pairMemo]] lookup-or-build for a verified-pair frame of the
+    * corpus under a parameter `tag` — the memo policy every
+    * pair-producing operator shares. */
   private def cachedPairs(docs: DataFrame, textCol: String, idCol: String,
                           n: Int, tag: String)
-                         (build: () => DataFrame): DataFrame = {
-    if (!cachingEnabled) return build()
-    MemoStats.touch()
-    val session = docs.sparkSession
-    val key = ((session, docs.queryExecution.logical.canonicalized, textCol, idCol, n),
-      tag)
-    pairCache.synchronized {
-      pairCache.filterInPlace { case (((s, _, _, _, _), _), _) => !s.sparkContext.isStopped }
-      pairCache.get(key)
-    } match {
-      case Some(cached) => cached
-      case None =>
-        val built = build().localCheckpoint()
-        pairCache.synchronized {
-          val out = pairCache.getOrElseUpdate(key, built)
-          while (pairCache.size > maxCachedIndexes)
-            pairCache.remove(pairCache.head._1)
-          out
-        }
-    }
-  }
+                         (build: => DataFrame): DataFrame =
+    pairMemo(docs, textCol, idCol, n, tag)(build.localCheckpoint())
 
   /** Decontamination: flag TRAIN documents whose shingles cover an
     * EVAL/benchmark document above a containment threshold — the
@@ -513,7 +449,7 @@ object Dedup {
   def containmentJoin(docs: DataFrame, textCol: String, idCol: String,
                       threshold: Double, n: Int = 3,
                       maxDf: Int = Int.MaxValue): DataFrame =
-    cachedPairs(docs, textCol, idCol, n, s"cont:$threshold:$maxDf") { () =>
+    cachedPairs(docs, textCol, idCol, n, s"cont:$threshold:$maxDf") {
       val (inter0, sz) = prunedIntersections(docs, textCol, idCol, n, maxDf)
       val inter = inter0
         .join(sz.select(col("doc_id").as("doc_a"), col("n_sh").as("na")), Seq("doc_a"))
@@ -724,7 +660,7 @@ object Dedup {
     // lshRecallAuto/minhashNearDupMd5Auto, and the estimator gate) — a
     // doc's signature doesn't depend on the rest of the corpus, so one
     // full-corpus frame serves every consumer's slice.
-    cachedPairs(docs, textCol, idCol, n, s"md5sig:$k") { () =>
+    cachedPairs(docs, textCol, idCol, n, s"md5sig:$k") {
       buildMd5Signatures(docs, textCol, idCol, n, k)
     }
 
@@ -831,7 +767,7 @@ object Dedup {
   private def md5BandedCandidates(docs: DataFrame, textCol: String,
                                   idCol: String, n: Int, k: Int,
                                   bands: Int, probes: Int = 0): DataFrame =
-    cachedPairs(docs, textCol, idCol, n, s"md5band:$k:$bands:$probes") { () =>
+    cachedPairs(docs, textCol, idCol, n, s"md5band:$k:$bands:$probes") {
       md5BandedCandidatesBuild(docs, textCol, idCol, n, k, bands, probes)
     }
 

@@ -1,9 +1,9 @@
 package graft.operators
 
-/** Counter of memo-cache consultations (hits AND builds) across the
-  * session-scoped frame/count memos ([[Dedup]]'s shingle-index and
-  * verified-pair caches, [[CorpusCount]]). One purpose: let the bench
-  * harness detect which queries are MEMO-BACKED — for every other
+/** Counter of memo consultations (hits AND builds) across every
+  * [[Memo]] ([[Dedup]]'s shingle-index and verified-pair memos,
+  * [[CorpusCount]]). One purpose: let the bench harness detect which
+  * queries are MEMO-BACKED — for every other
   * query cold ≡ warm, so a cache-cold arm is pure duplicated work.
   * Round 14's bench ran the cold arm over all 293 queries and blew the
   * driver's 60-minute budget (BENCH_r14.json rc=124); scoping it to
@@ -11,10 +11,9 @@ package graft.operators
   * cold-vs-warm signal (the only queries where the two differ) at a
   * fraction of the cost.
   *
-  * `touches` is monotonic; callers diff it around a query run. Bumped
-  * only when caching is enabled (disabled ⇒ cold ≡ warm by
-  * construction, so the query is correctly classified as not
-  * memo-backed). */
+  * `touches` is monotonic; callers diff it around a query run. Every
+  * memo call bumps it, including one whose input fingerprint could not
+  * be taken and so built uncached. */
 object MemoStats {
   val touches = new java.util.concurrent.atomic.AtomicLong(0L)
   def touch(): Unit = { touches.incrementAndGet(); () }

@@ -116,13 +116,15 @@ object KVBinSource {
         "kvbin reads need a 'path' or a valid 'endpoints' option"))
   }
 
-  /** ONE POLL round-trip for an endpoints-only table's scalar meta —
-    * the `absent` marker rides it (see [[KVBinNet.AbsentKey]]), so the
-    * read gate and the stat-column schema come from the same wire call. */
-  def pollMetaFor(endpoints: Option[String]): Map[String, String] = {
+  /** ONE POLL round-trip for a table's scalar meta — over the wire when
+    * `endpoints` name stores, else from the `dir` index header. For an
+    * endpoints-only table the `absent` marker rides it (see
+    * [[KVBinNet.AbsentKey]]), so the read gate and the stat-column
+    * schema come from the same wire call. */
+  def pollMetaFor(dir: String, endpoints: Option[String]): Map[String, String] = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    RegionClient.connect(null, endpoints, conf).pollMeta()
+    RegionClient.connect(dir, endpoints, conf).pollMeta()
   }
 
   /** (key, value) plus one non-null virtual LONG column per declared
@@ -149,7 +151,7 @@ class KVBinTable(dir: String, tableEndpoints: Option[String] = None)
   // resolves the same table object and must see the 2-column schema).
   private lazy val polledMeta: Option[Map[String, String]] =
     if (dir == null && tableEndpoints.isDefined)
-      Some(KVBinSource.pollMetaFor(tableEndpoints))
+      Some(KVBinSource.pollMetaFor(null, tableEndpoints))
     else None
   private lazy val statDefs = polledMeta match {
     case Some(m) => KVBin.statDefs(m)
@@ -157,17 +159,18 @@ class KVBinTable(dir: String, tableEndpoints: Option[String] = None)
   }
   override def name(): String =
     s"kvbin:${Option(dir).orElse(tableEndpoints).getOrElse("?")}"
-  /** LIVE (table_id, generation) of an endpoints-backed table — memo
-    * keys (CorpusCount) include it because a wire table's canonicalized
-    * plan carries no path/mtime signal at all: appends over the wire
-    * would otherwise serve stale memoized counts within a session.
-    * One O(1) POLL per call; None for path-backed tables (their plans
-    * carry the path, and the in-place-rewrite caveat is documented). */
-  private[graft] def liveEpoch: Option[(String, String)] =
-    if (dir == null && tableEndpoints.isDefined) {
-      val m = KVBinSource.pollMetaFor(tableEndpoints)
-      Some((m.getOrElse("table_id", ""), m.getOrElse("generation", "")))
-    } else None
+  /** LIVE (table_id, generation) of the table the reads are served
+    * from — the input fingerprint [[graft.operators.Memo]] keys carry,
+    * because a kvbin table's canonicalized plan carries no content
+    * signal at all: an in-place `KVBin.write` (fresh table_id) or an
+    * append (next generation), over the wire or through the path,
+    * would otherwise serve stale memoized values within a session. One
+    * O(1) POLL per call: the store's when endpoints are set, else the
+    * `_index` header of the path. */
+  private[graft] def liveEpoch: (String, String) = {
+    val m = KVBinSource.pollMetaFor(dir, tableEndpoints)
+    (m.getOrElse("table_id", ""), m.getOrElse("generation", ""))
+  }
   override def schema(): StructType = KVBinSource.schemaOf(statDefs)
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,

@@ -453,12 +453,12 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
-  test("memo caches key on the file plan: in-place rewrite is served stale until clearCaches / opt-out") {
-    // pins the DOCUMENTED staleness contract of the index/pair memo
-    // caches (key = canonicalized plan = root path + schema for file
-    // reads): rewriting the same path in place within one JVM serves
-    // the old corpus's answer; clearCaches() and cachingEnabled=false
-    // are the two recovery paths
+  test("memo keys fingerprint the input files: an in-place rewrite is answered afresh") {
+    // the index/pair memos key on the canonicalized plan (root path +
+    // schema for a file read) PLUS the (path, length, mtime) of every
+    // file the read listed: rewriting the same path in place is a new
+    // key, with no clearCaches() needed; clearCaches() stays the
+    // explicit reset
     val dir = java.nio.file.Files.createTempDirectory("dedup_cache").toString
     val p = s"$dir/docs.parquet"
     def write(rows: (Long, String)*): Unit =
@@ -471,18 +471,35 @@ class DedupSpec extends SparkTestBase {
       write((1L, "aa bb cc dd"), (2L, "aa bb cc dd"))
       assert(run() === Set((1L, 2L)))
       // same path, same schema, different rows: a FRESH spark.read of
-      // the rewritten path still canonicalizes to the same cache key,
-      // so the memoized pair frame answers for the OLD corpus
+      // the rewritten path lists new files, so the memo answers for the
+      // NEW corpus
       write((1L, "aa bb cc dd"), (3L, "zz yy xx ww"))
-      assert(run() === Set((1L, 2L)), "in-place rewrite must hit the stale cache")
-      // recovery 1: explicit invalidation
+      assert(run() === Set.empty, "in-place rewrite must not hit the old entry")
+      // explicit invalidation still answers for the current corpus
       Dedup.clearCaches()
-      assert(run() === Set.empty)
-      // recovery 2: caching opt-out sees every rewrite immediately
       write((4L, "mm nn oo pp"), (5L, "mm nn oo pp"))
-      Dedup.cachingEnabled = false
-      try assert(run() === Set((4L, 5L)))
-      finally Dedup.cachingEnabled = true
+      assert(run() === Set((4L, 5L)))
+    } finally Dedup.clearCaches()
+  }
+
+  test("memo reuse contract: fresh reads of an unchanged path share one shingle index; a rewrite builds a new one") {
+    // a fingerprint that missed on every fresh read would make
+    // dropNearDuplicates rebuild the index minhashNearDup just built
+    val dir = java.nio.file.Files.createTempDirectory("dedup_reuse").toString
+    val p = s"$dir/docs.parquet"
+    def write(rows: (Long, String)*): Unit =
+      rows.toDF("doc_id", "text").write.mode("overwrite").parquet(p)
+    def index(): org.apache.spark.sql.DataFrame =
+      Dedup.hashedShingleIndex(spark.read.parquet(p), "text", "doc_id", 3)
+    Dedup.clearCaches()
+    try {
+      write((1L, "aa bb cc dd"), (2L, "aa bb cc ee"))
+      val first = index()
+      assert(index() eq first, "two fresh reads of an unchanged path must share the index")
+      write((1L, "aa bb cc dd"), (3L, "zz yy xx ww"))
+      val rewritten = index()
+      assert(!(rewritten eq first), "a rewritten path must build a new index")
+      assert(rewritten.select("doc_id").distinct().as[Long].collect().toSet === Set(1L, 3L))
     } finally Dedup.clearCaches()
   }
 
