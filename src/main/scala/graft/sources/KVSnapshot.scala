@@ -153,12 +153,13 @@ object KVSnapshot {
     }
 
   /** Deterministic region→store assignment for the two-store fleet:
-    * region ids are `part-NNNNN.kv`, so parity of NNNNN splits the key
-    * space across stores the way PD spreads regions across store nodes
-    * (`checksum/checksum.go:78-95` fans per-region work cluster-wide). */
-  private def regionParity(id: String): Long = {
-    val digits = id.filter(_.isDigit)
-    if (digits.isEmpty) 0L else digits.toLong % 2
+    * parity of a region's partition field NNNNN
+    * (`part-NNNNN[-…].kv`) splits the key space across stores the way
+    * PD spreads regions across store nodes (`checksum/checksum.go:78-95`
+    * fans per-region work cluster-wide). */
+  private def regionParity(id: String): Long = id match {
+    case graft.sources.kvbin.KVBinDataWriter.RegionFile(p) => p.toLong % 2
+    case _ => 0L
   }
 
   /** Comma-separated endpoints of a live TWO-server fleet over the src

@@ -1,10 +1,10 @@
 package graft.sources.kvbin
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.io.{BufferedInputStream, DataInputStream}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** "Region"-file KV storage format backing the [[KVBinSource]] DSv2
@@ -14,9 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sidecar IS the region metadata: one line per file with its key
   * range).
   *
-  * Layout: `dir/part-NNNNN.kv` — length-prefixed records
-  * `[klen:int32][key][vlen:int32][value]`, sorted by key, each file a
-  * contiguous key range; `dir/_index` — `fileName<TAB>minKeyHex<TAB>
+  * Layout: `dir/part-*.kv` (names: [[KVBinDataWriter.RegionFile]]) —
+  * length-prefixed records `[klen:int32][key][vlen:int32][value]`,
+  * sorted by key, each file a contiguous key range unless placed by
+  * `__cluster` (see [[write]]); `dir/_index` — `fileName<TAB>minKeyHex<TAB>
   * maxKeyHex<TAB>count[<TAB>statMin<TAB>statMax ...]` per file, headed
   * by `#key=value` metadata lines. Reserved headers: `#api_version`
   * (cluster version gate), `#stats` (declared record statistics),
@@ -36,10 +37,17 @@ object KVBin {
 
   val IndexFile = "_index"
 
-  /** Write a binary (key, value) frame as `numRanges` contiguous region
-    * files + index, stamped with the cluster API version (`#api_version=`
-    * header line in the index — the source-side half of the reference's
-    * version gate, `utils/utils.go:13-26`). Returns the index entries.
+  /** The optional input column that steers region placement (see [[write]]). */
+  val ClusterColumn = "__cluster"
+
+  /** Write a binary (key, value) frame as `numRanges` region files +
+    * index, replacing whatever table `dir` held, stamped with the
+    * cluster API version (`#api_version=` header line in the index — the
+    * source-side half of the reference's version gate,
+    * `utils/utils.go:13-26`). Returns the index entries. This is the
+    * DSv2 write ([[KVBinWriteBuilder]]) in overwrite mode, so it carries
+    * that write's commit protocol: attempt-unique region names, the
+    * atomic `_index` swap, and the sweep of the replaced regions.
     *
     * Data skipping (the Delta/Iceberg stats analog over the house
     * connector): `stats` declares named long-valued record statistics
@@ -63,79 +71,15 @@ object KVBin {
             apiVersion: String = "V1",
             stats: Seq[(String, String)] = Nil)
       : Seq[(String, Array[Byte], Array[Byte], Long)] = {
-    val spark = kv.sparkSession
-    import spark.implicits._
-    // the session's hadoop conf (session-scoped spark.hadoop.* settings,
-    // credentials, FS implementations) drives BOTH the driver-side
-    // mkdirs/index write and — via Spark's serializable wrapper — the
-    // executor-side region writes
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val fs = FileSystem.get(new java.net.URI(dir), sconf.value)
-    fs.mkdirs(new Path(dir))
-    KVBinStat.validate(stats)
-    val clusterCol =
-      if (kv.columns.contains("__cluster")) col("__cluster") else col("key")
-    val specs = stats.map(_._2)
-    val index = kv
-      .select(col("key"), col("value"), clusterCol.as("__c"))
-      .repartitionByRange(numRanges, col("__c"))
-      .sortWithinPartitions(col("key"))
-      .select(col("key"), col("value"))
-      .as[(Array[Byte], Array[Byte])]
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val name = f"part-$pid%05d.kv"
-          val fs = FileSystem.get(new java.net.URI(dir), sconf.value)
-          val out = new DataOutputStream(new BufferedOutputStream(
-            fs.create(new Path(dir, name), true), 1 << 16))
-          var minK: Array[Byte] = null
-          var maxK: Array[Byte] = null
-          var n = 0L
-          val sMin = Array.fill(specs.size)(Long.MaxValue)
-          val sMax = Array.fill(specs.size)(Long.MinValue)
-          // sortWithinPartitions(key) above makes first/last = min/max
-          it.foreach { case (k, v) =>
-            out.writeInt(k.length); out.write(k)
-            out.writeInt(v.length); out.write(v)
-            if (minK == null) minK = k
-            maxK = k
-            var i = 0
-            while (i < specs.size) {
-              val x = KVBinStat.eval(specs(i), k, v)
-              if (x < sMin(i)) sMin(i) = x
-              if (x > sMax(i)) sMax(i) = x
-              i += 1
-            }
-            n += 1
-          }
-          out.close()
-          Iterator.single((name, minK, maxK, n, sMin.toSeq, sMax.toSeq))
-        }
-      }
-      .collect()
-      .toSeq
-    // generation stamping (the O(1) streaming-offset contract): a fresh
-    // table starts at generation 1 with every region born in it; the
-    // table_id pins the table's identity so a checkpointed epoch offset
-    // can detect a wholesale replacement (same role the name set played)
-    val header = headerLines(Map(
-      "api_version" -> apiVersion,
-      "generation" -> "1",
-      "table_id" -> java.util.UUID.randomUUID().toString) ++
-      (if (index.isEmpty) Map.empty
-       else Map("gen.1" -> index.map(_._1).mkString(","))) ++
-      (if (stats.isEmpty) Map.empty
-       else Map("stats" -> stats.map { case (n, sp) => s"$n:$sp" }.mkString(","))))
-    val lines = header ++ index.map { case (f, mn, mx, n, lo, hi) =>
-      (Seq(f, hexOf(mn), hexOf(mx), n.toString) ++
-        lo.zip(hi).flatMap { case (a, b) => Seq(a.toString, b.toString) })
-        .mkString("\t")
-    }
-    writeIndexAtomic(dir, sconf.value, lines.mkString("\n"))
-    index.map { case (f, mn, mx, n, _, _) => (f, mn, mx, n) }
+    val cols = Seq("key", "value") ++ kv.columns.find(_ == ClusterColumn)
+    kv.select(cols.map(col): _*).write
+      .format(classOf[KVBinSource].getName)
+      .option("path", dir)
+      .option("ranges", numRanges.toString)
+      .option("api_version", apiVersion)
+      .option("stats", stats.map { case (n, sp) => s"$n:$sp" }.mkString(","))
+      .mode("overwrite").save()
+    readIndex(dir, kv.sparkSession.sessionState.newHadoopConf())
   }
 
   /** Atomically replace `dir/_index`: write a temp sibling, then

@@ -137,6 +137,22 @@ object KVBinSource {
     })
 
   def schemaFor(dir: String): StructType = schemaOf(statDefs(dir))
+
+  /** Region pruning shared by the batch scan and the micro-batch stream:
+    * keep `r` unless its [minKey, maxKey] misses the key scope (`start`
+    * inclusive, `end` exclusive, `endIncl` inclusive; null = unbounded)
+    * or its stamped stat box misses a pushed stat range. A region
+    * without stamped ranges (stats-unaware rewrite, network client) is
+    * never skipped — the reader still row-filters, so skipping is
+    * purely an optimization. */
+  def inScope(r: RegionInfo, start: Array[Byte], end: Array[Byte],
+              endIncl: Array[Byte], statBounds: Seq[StatBound]): Boolean =
+    (start == null || KVBin.compare(r.maxKey, start) >= 0) &&
+    (end == null || KVBin.compare(r.minKey, end) < 0) &&
+    (endIncl == null || KVBin.compare(r.minKey, endIncl) <= 0) &&
+    statBounds.forall(b => !r.stats.isDefinedAt(b.i) || {
+      val (mn, mx) = r.stats(b.i); mx >= b.lo && mn <= b.hi
+    })
 }
 
 class KVBinTable(dir: String, tableEndpoints: Option[String] = None)
@@ -175,7 +191,11 @@ class KVBinTable(dir: String, tableEndpoints: Option[String] = None)
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
+      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
+      // writes carry columns the read schema lacks (`__cluster`), and a
+      // (key, value) write to a stats table omits its virtual columns:
+      // KVBinWriteBuilder validates the input schema itself
+      TableCapability.ACCEPT_ANY_SCHEMA)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // the READ gate on the POLL `absent` marker: an endpoints scan of a
     // mistyped / not-yet-created table fails HERE — at planning, with
@@ -427,18 +447,9 @@ class KVBinScan(dir: String, start: Array[Byte], end: Array[Byte],
   }
 
   private def prunedRegions: Seq[RegionInfo] = regionList.filter { r =>
-    (start == null || KVBin.compare(r.maxKey, start) >= 0) &&
-    (end == null || KVBin.compare(r.minKey, end) < 0) &&
-    (endIncl == null || KVBin.compare(r.minKey, endIncl) <= 0) &&
+    KVBinSource.inScope(r, start, end, endIncl, statBounds) &&
     runtimeKeys.forall(_.exists(k =>
-      KVBin.compare(k, r.minKey) >= 0 && KVBin.compare(k, r.maxKey) <= 0)) &&
-    // stats skipping: drop the region when its index [min,max] box
-    // misses a pushed stat range; a region without stamped ranges
-    // (stats-unaware rewrite, network client) is never skipped — the
-    // reader still row-filters, so skipping is purely an optimization
-    statBounds.forall(b => !r.stats.isDefinedAt(b.i) || {
-      val (mn, mx) = r.stats(b.i); mx >= b.lo && mn <= b.hi
-    })
+      KVBin.compare(k, r.minKey) >= 0 && KVBin.compare(k, r.maxKey) <= 0))
   }
 
   /** Region-index statistics for Catalyst's cost model: row count
@@ -742,18 +753,6 @@ class KVBinMicroBatchStream(dir: String, start: Array[Byte],
     gens
   }
 
-  /** Key-range + stat pruning, identical to the batch scan (a region
-    * without stamped stat ranges never skips). */
-  private def scopePrune(regions: Seq[RegionInfo]): Seq[RegionInfo] =
-    regions.filter { r =>
-      (start == null || KVBin.compare(r.maxKey, start) >= 0) &&
-      (end == null || KVBin.compare(r.minKey, end) < 0) &&
-      (endIncl == null || KVBin.compare(r.minKey, endIncl) <= 0) &&
-      statBounds.forall(b => !r.stats.isDefinedAt(b.i) || {
-        val (mn, mx) = r.stats(b.i); mx >= b.lo && mn <= b.hi
-      })
-    }
-
   override def planInputPartitions(startO: Offset, endO: Offset)
       : Array[InputPartition] = {
     val client = connect()
@@ -859,7 +858,7 @@ class KVBinMicroBatchStream(dir: String, start: Array[Byte],
         // AHEAD of endO (another append landed) — those wait their turn
         regions.filter(r => target.contains(r.id) && !seen.contains(r.id))
     }
-    scopePrune(due)
+    due.filter(KVBinSource.inScope(_, start, end, endIncl, statBounds))
       .map(r => KVBinInputPartition(client, r.id, start, end, endIncl,
         required.fieldNames, -1, statDefs.toMap, statBounds): InputPartition)
       .toArray

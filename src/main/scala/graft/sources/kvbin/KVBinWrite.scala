@@ -10,16 +10,19 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.util.SerializableConfiguration
 
 /** DSv2 WRITE path for the [[KVBinSource]] connector — the symmetric
-  * half of the read side, so `df.write.format("kvbin")` produces the
-  * same region-file + `_index` layout [[KVBin.write]] builds, but
-  * through Spark's planner-integrated write protocol:
+  * half of the read side and the ONE writer of the region-file +
+  * `_index` layout: `df.write.format("kvbin")` and [[KVBin.write]] (a
+  * thin call into it) both land here, through Spark's
+  * planner-integrated write protocol:
   *
-  *  - `RequiresDistributionAndOrdering` declares ORDERED distribution
-  *    by `key` plus an ascending in-partition sort — Catalyst plans the
-  *    range-partition + sort exchange itself (the declarative analog of
+  *  - `RequiresDistributionAndOrdering` ([[KVBinWrite]]) declares
+  *    ORDERED distribution by `key` — or by the input's `__cluster`
+  *    column when it carries one (Z-order placement) — plus an ascending
+  *    in-partition sort by `key`. Catalyst plans the range-partition +
+  *    sort exchange itself (the declarative analog of
   *    `repartitionByRange(...).sortWithinPartitions(...)`), so every
-  *    region file is a contiguous sorted key range by CONSTRUCTION, and
-  *    a caller can never produce an unsorted region. `ranges` option →
+  *    region file is internally key-sorted by CONSTRUCTION, and a caller
+  *    can never produce an unsorted region. `ranges` option →
   *    `requiredNumPartitions` (region count ≙ split budget).
   *  - The task-side [[KVBinDataWriter]] streams records through the
   *    Hadoop FS API on EXECUTORS (file:// locally, HDFS/object stores
@@ -72,20 +75,26 @@ class KVBinWriteBuilder(dir: String, info: LogicalWriteInfo,
     val declared =
       if (dir != null) KVBinSource.statDefs(dir)
       else KVBinSource.statDefsFor(None, endpoints)
+    // the table accepts any schema (KVBinTable: ACCEPT_ANY_SCHEMA), so
+    // this is the write's only column validation
     require(s.length >= 2 &&
         s.fields.take(2).map(f => (f.name, f.dataType.typeName)).toSeq ==
           Seq(("key", "binary"), ("value", "binary")),
-      s"kvbin writes require schema (key binary, value binary [, stat long ...]), got $s")
-    // a stats-bearing TABLE's V2 write resolution supplies the virtual
-    // stat columns too (byName needs every table column) — accept and
-    // IGNORE them: stats are a pure function of the record bytes, so
-    // the writer re-derives them from the spec rather than trusting
-    // (or requiring) caller-provided values
-    val declaredNames = declared.map(_._1).toSet
+      s"kvbin writes require schema (key binary, value binary [, stat long ...] " +
+        s"[, ${KVBin.ClusterColumn} long]), got $s")
+    // a read of a stats-bearing table carries the virtual stat columns
+    // (a compaction writes it back whole) — accept and IGNORE them:
+    // stats are a pure function of the record bytes, so the writer
+    // re-derives them from the spec rather than trusting (or requiring)
+    // caller-provided values. `__cluster` only steers placement.
+    val declaredNames = declared.map(_._1).toSet + KVBin.ClusterColumn
     s.fields.drop(2).foreach(f => require(
       declaredNames(f.name) && f.dataType.typeName == "long",
       s"kvbin write got unexpected column ${f.name}: ${f.dataType.typeName} " +
-        s"(declared stats: ${declared.map(_._1).mkString(",")})"))
+        s"(declared stats: ${declared.map(_._1).mkString(",")}; placement: " +
+        s"${KVBin.ClusterColumn} long)"))
+    val placement =
+      if (s.fieldNames.contains(KVBin.ClusterColumn)) KVBin.ClusterColumn else "key"
     // stats to stamp: the writer option wins; otherwise a preserved /
     // appended table keeps stamping its own declared specs (compaction
     // RESTAMPS per-region ranges instead of dropping them)
@@ -138,8 +147,9 @@ class KVBinWriteBuilder(dir: String, info: LogicalWriteInfo,
     assignTid.foreach(t => require(t.matches("[0-9a-fA-F-]+"),
       s"kvbin assign_table_id must be hex-dash shaped, got '$t'"))
     if (dir != null)
-      new KVBinWrite(dir, doTruncate, ranges, api, preserve,
-        info.queryId(), stats, deferSweep, userMeta ++ forceBump, assignTid)
+      new KVBinWrite(placement, ranges, new KVBinBatchWrite(dir, doTruncate,
+        api, preserve, info.queryId(), stats, deferSweep,
+        userMeta ++ forceBump, assignTid))
     else {
       val eps = endpoints.toSeq.flatMap(_.split(",")).map(_.trim)
         .filter(_.matches(".+:\\d+"))
@@ -147,8 +157,9 @@ class KVBinWriteBuilder(dir: String, info: LogicalWriteInfo,
         "one valid host:port endpoint")
       if (eps.size == 1)
         // ONE store serving the whole table (a write proxy / leader)
-        new KVBinWireWrite(eps.head, doTruncate, ranges, api, preserve,
-          info.queryId(), stats, deferSweep, userMeta ++ forceBump, assignTid)
+        new KVBinWrite(placement, ranges, new KVBinWireBatchWrite(eps.head,
+          doTruncate, api, preserve, info.queryId(), stats, deferSweep,
+          userMeta ++ forceBump, assignTid))
       else {
         // SHARDED fleet write (r14): every destination store must
         // advertise an owned key range (OWNS) — PUT streams route to
@@ -176,9 +187,9 @@ class KVBinWriteBuilder(dir: String, info: LogicalWriteInfo,
           .getOrElse(KVBinDataWriter.jobTag(info.queryId()))
         require(commitKey.matches("[a-z0-9_.-]+"),
           s"kvbin commit_key must be [a-z0-9_.-]+, got '$commitKey'")
-        new KVBinFleetWireWrite(stores, doTruncate, ranges, api, preserve,
-          info.queryId(), stats, deferSweep,
-          userMeta ++ forceBump + ("fleet_job" -> commitKey), assignTid)
+        new KVBinWrite(placement, ranges, new KVBinFleetWireBatchWrite(stores,
+          doTruncate, api, preserve, info.queryId(), stats, deferSweep,
+          userMeta ++ forceBump + ("fleet_job" -> commitKey), assignTid))
       }
     }
   }
@@ -243,32 +254,38 @@ object KVBinWrite {
     }
 }
 
-class KVBinWrite(dir: String, truncate: Boolean, ranges: Int,
-                 apiVersion: Option[String], preserveMeta: Boolean,
-                 queryId: String, stats: Seq[(String, String)] = Nil,
-                 deferSweep: Boolean = false,
-                 userMeta: Map[String, String] = Map.empty,
-                 assignTid: Option[String] = None)
+/** The one [[Write]] of every kvbin destination — a filesystem path,
+  * one store, or a sharded fleet; `batch` (built when Spark asks for
+  * it, at write planning) is where the destinations differ. Ordered
+  * distribution on `placement` makes Spark range-partition the write:
+  * on `key` the partitions are the contiguous, non-overlapping key
+  * ranges a region layout needs; on `__cluster` (Z-order placement,
+  * e.g. [[graft.operators.Layout.zorder2]] of two quantized stats)
+  * regions become compact boxes in stat space, which is what makes
+  * per-region stat min/max TIGHT enough to skip on either dimension,
+  * while cross-region key ranges may overlap. Either way the
+  * in-partition sort by `key` keeps each region internally sorted (the
+  * reader's in-region range scoping relies on it). */
+class KVBinWrite(placement: String, ranges: Int, batch: => BatchWrite)
     extends Write with RequiresDistributionAndOrdering {
-
-  // ordered distribution on key → Spark range-partitions the write, so
-  // partitions are the contiguous, non-overlapping key ranges a region
-  // layout needs; the in-partition sort makes each file internally sorted
   override def requiredDistribution(): Distribution =
-    Distributions.ordered(Array(keyAsc))
-  override def requiredOrdering(): Array[SortOrder] = Array(keyAsc)
+    Distributions.ordered(Array(asc(placement)))
+  override def requiredOrdering(): Array[SortOrder] = Array(asc("key"))
   override def requiredNumPartitions(): Int = ranges
-  private def keyAsc: SortOrder =
-    Expressions.sort(Expressions.column("key"), SortDirection.ASCENDING)
-
-  override def toBatch: BatchWrite =
-    new KVBinBatchWrite(dir, truncate, apiVersion, preserveMeta, queryId,
-      stats, deferSweep, userMeta, assignTid)
+  override def toBatch: BatchWrite = batch
+  private def asc(c: String): SortOrder =
+    Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)
 }
 
 case class KVBinCommitMessage(file: String, minHex: String, maxHex: String,
                               count: Long, statLo: Seq[Long] = Nil,
-                              statHi: Seq[Long] = Nil) extends WriterCommitMessage
+                              statHi: Seq[Long] = Nil) extends WriterCommitMessage {
+  /** The region this message publishes; None for an empty task. */
+  def fresh: Option[KVBinCommit.Fresh] =
+    if (count > 0) Some(KVBinCommit.Fresh(file, KVBin.unhex(minHex),
+      KVBin.unhex(maxHex), count, statLo, statHi))
+    else None
+}
 
 class KVBinBatchWrite(dir: String, truncate: Boolean,
                       apiVersion: Option[String], preserveMeta: Boolean,
@@ -306,10 +323,7 @@ class KVBinBatchWrite(dir: String, truncate: Boolean,
       stats.map(_._2))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.collect {
-      case KVBinCommitMessage(f, mn, mx, n, lo, hi) if n > 0 =>
-        KVBinCommit.Fresh(f, KVBin.unhex(mn), KVBin.unhex(mx), n, lo, hi)
-    }.toSeq
+    val fresh = messages.toSeq.collect { case m: KVBinCommitMessage => m.fresh }.flatten
     KVBinCommit.commit(dir, conf.value, truncate, apiVersion, preserveMeta,
       stats, deferSweep, userMeta, fresh,
       assignedTableId = assignTid,
@@ -488,6 +502,9 @@ object KVBinCommit {
     // foreign file in the directory (_SUCCESS marker, sidecar) is not
     // ours to delete
     preSwapCheck()
+    // a write with no rows to a fresh path created no region file, and
+    // so no directory for the index
+    fs.mkdirs(new Path(dir))
     // atomic swap (tmp + rename-overwrite): a racing reader — including
     // the streaming tail polling latestOffset — must see the previous
     // or the new index whole, never a truncated in-place rewrite
@@ -519,11 +536,12 @@ class KVBinWriterFactory(dir: String, conf: SerializableConfiguration,
 
 object KVBinDataWriter {
   /** The connector's own file-name shapes — the commit sweep deletes
-    * only names this pattern matches: `part-NNNNN.kv` ([[KVBin.write]]),
-    * `part-NNNNN-<task>.kv` (pre-jobTag DSv2 tables on disk), and
-    * `part-NNNNN-<jobTag>-<task>.kv` (current DSv2). A foreign file in
-    * the directory (_SUCCESS marker, sidecar) is not ours to delete. */
-  val RegionFile: scala.util.matching.Regex = "part-\\d{5}(-[0-9a-f]+)*\\.kv".r
+    * only names this pattern matches: `part-NNNNN-<jobTag>-<task>.kv`
+    * (written today; fleet segments add `-<seg>`), and on older tables
+    * `part-NNNNN.kv` and `part-NNNNN-<task>.kv`. A foreign file in the
+    * directory (_SUCCESS marker, sidecar) is not ours to delete. The
+    * one capture group is the 5-digit partition field NNNNN. */
+  val RegionFile: scala.util.matching.Regex = "part-(\\d{5})(?:-[0-9a-f]+)*\\.kv".r
 
   /** Job-unique name component from the DSv2 queryId (a per-write UUID):
     * taskIds are only unique within one Spark application, so two
@@ -551,42 +569,54 @@ object KVBinDataWriter {
   }
 }
 
-/** Streams (key, value) records into one attempt-unique region file
-  * (`part-<partition>-<jobTag>-<taskId>.kv` — unique across attempts
-  * AND across writing applications). Opens lazily (an empty partition
-  * writes no file) and tracks min/max keys; the declared ordering makes
-  * them first/last, and the cheap per-record compare turns any ordering
-  * violation into a loud task failure instead of a silently unsorted
-  * region. */
-class KVBinDataWriter(dir: String, conf: SerializableConfiguration,
-                      jobTag: String, partitionId: Int, taskId: Long,
-                      statSpecs: Seq[String] = Nil)
+/** The record loop every kvbin data writer shares — one definition of
+  * what a region's bytes and summary are: length-prefixed
+  * `[klen:int32][key][vlen:int32][value]` framing, the key-order check
+  * (the declared ordering makes a region's first/last key its min/max;
+  * the cheap per-record compare turns any violation into a loud task
+  * failure instead of a silently unsorted region), the count, and the
+  * per-region stat min/max RE-DERIVED from the record bytes (never read
+  * from caller-supplied columns — the ranges a stats table's rewrite
+  * restamps so data skipping survives compaction). A data writer
+  * supplies only where a region's bytes go ([[streamFor]]: a filesystem
+  * file, one PUT stream, or one PUT segment per owner store) and its
+  * own commit/abort. */
+abstract class KVBinRegionWriter(partitionId: Int, statSpecs: Seq[String])
     extends DataWriter[InternalRow] {
 
-  private val name = f"part-$partitionId%05d-$jobTag-$taskId.kv"
-  private var out: DataOutputStream = _
   private var minK: Array[Byte] = _
   private var prevK: Array[Byte] = _
   private var n = 0L
-  // per-region stat min/max, re-DERIVED from the record bytes (never
-  // read from caller-supplied columns) — the ranges a stats table's
-  // rewrite restamps so data skipping survives compaction
   private val sLo = Array.fill(statSpecs.size)(Long.MaxValue)
   private val sHi = Array.fill(statSpecs.size)(Long.MinValue)
 
-  override def write(row: InternalRow): Unit = {
+  /** The stream of the region the record keyed `k` belongs to — opened
+    * on first use, so an empty partition writes nothing. */
+  protected def streamFor(k: Array[Byte]): DataOutputStream
+
+  /** The next record heads a new region: reset its summary. */
+  protected final def startRegion(): Unit = {
+    minK = null
+    n = 0L
+    java.util.Arrays.fill(sLo, Long.MaxValue)
+    java.util.Arrays.fill(sHi, Long.MinValue)
+  }
+
+  /** The current region's manifest, published under `file`. */
+  protected final def regionMessage(file: String): KVBinCommitMessage =
+    KVBinCommitMessage(file,
+      if (n == 0) "" else KVBin.hexOf(minK),
+      if (n == 0) "" else KVBin.hexOf(prevK), n, sLo.toSeq, sHi.toSeq)
+
+  override final def write(row: InternalRow): Unit = {
     val k = row.getBinary(0)
     val v = row.getBinary(1)
-    if (out == null) {
-      val fs = FileSystem.get(new java.net.URI(dir), conf.value)
-      out = new DataOutputStream(new BufferedOutputStream(
-        fs.create(new Path(dir, name), true), 1 << 16))
-      minK = k
-    }
     require(prevK == null || KVBin.compare(prevK, k) <= 0,
       s"kvbin write received out-of-order key in partition $partitionId")
+    val out = streamFor(k)
     out.writeInt(k.length); out.write(k)
     out.writeInt(v.length); out.write(v)
+    if (minK == null) minK = k
     var i = 0
     while (i < statSpecs.size) {
       val x = KVBinStat.eval(statSpecs(i), k, v)
@@ -598,12 +628,32 @@ class KVBinDataWriter(dir: String, conf: SerializableConfiguration,
     n += 1
   }
 
+  override def close(): Unit = ()
+}
+
+/** Streams (key, value) records into one attempt-unique region file
+  * (`part-<partition>-<jobTag>-<taskId>.kv` — unique across attempts
+  * AND across writing applications). */
+class KVBinDataWriter(dir: String, conf: SerializableConfiguration,
+                      jobTag: String, partitionId: Int, taskId: Long,
+                      statSpecs: Seq[String] = Nil)
+    extends KVBinRegionWriter(partitionId, statSpecs) {
+
+  private val name = f"part-$partitionId%05d-$jobTag-$taskId.kv"
+  private var out: DataOutputStream = _
+
+  override protected def streamFor(k: Array[Byte]): DataOutputStream = {
+    if (out == null) {
+      val fs = FileSystem.get(new java.net.URI(dir), conf.value)
+      out = new DataOutputStream(new BufferedOutputStream(
+        fs.create(new Path(dir, name), true), 1 << 16))
+    }
+    out
+  }
+
   override def commit(): WriterCommitMessage = {
     if (out != null) out.close()
-    KVBinCommitMessage(name,
-      if (minK == null) "" else KVBin.hexOf(minK),
-      if (prevK == null) "" else KVBin.hexOf(prevK), n,
-      sLo.toSeq, sHi.toSeq)
+    regionMessage(name)
   }
 
   override def abort(): Unit = {
@@ -613,11 +663,39 @@ class KVBinDataWriter(dir: String, conf: SerializableConfiguration,
       fs.delete(new Path(dir, name), false)
     }
   }
-
-  override def close(): Unit = ()
 }
 
-/** The ENDPOINTS-ONLY write — the wire twin of [[KVBinWrite]], closing
+/** One PUT request: attempt file `name` streamed to the store at
+  * `address`. The record framing IS the region-file layout, so the
+  * server spools the bytes to the attempt file without parsing.
+  * [[finish]] sends the terminator frame and requires the store's ack;
+  * [[abort]] closes the socket without it — the server's PUT loop hits
+  * EOF and deletes the partial file, so nothing is left to reclaim
+  * client-side. */
+private[kvbin] final class KVBinPut(address: String, val name: String) {
+  private val sock = {
+    val Array(host, port) = address.split(":", 2)
+    val s = new java.net.Socket()
+    s.connect(new java.net.InetSocketAddress(host, port.toInt), 10000)
+    s.setSoTimeout(60000)
+    s
+  }
+  val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream, 1 << 16))
+  private val in = new java.io.DataInputStream(sock.getInputStream)
+  out.write(s"PUT $name\n".getBytes("UTF-8"))
+
+  def finish(): Unit = {
+    out.writeInt(-1) // terminator: the server closes + acks the file
+    out.flush()
+    val ack = in.readByte()
+    sock.close()
+    require(ack == 1, s"kvbin wire PUT of $name refused by $address")
+  }
+
+  def abort(): Unit = sock.close()
+}
+
+/** The ENDPOINTS-ONLY write — the wire twin of [[KVBinBatchWrite]], closing
   * the read/write asymmetry the r12 surface had (reads, tails and
   * checksums worked with no filesystem path; replication still needed
   * one to the destination). Executor tasks stream their sorted region
@@ -640,26 +718,8 @@ class KVBinDataWriter(dir: String, conf: SerializableConfiguration,
   *
   * Single-store scope: PUT/COMMIT address ONE server owning the whole
   * table (a write proxy / leader, the role PD's region leader plays for
-  * raw_put). Multi-endpoint fleet writes would need routing appends by
-  * key range to owners plus a cross-store commit — refused loudly at
-  * the builder with this remedy named. */
-class KVBinWireWrite(address: String, truncate: Boolean, ranges: Int,
-                     apiVersion: Option[String], preserveMeta: Boolean,
-                     queryId: String, stats: Seq[(String, String)],
-                     deferSweep: Boolean, userMeta: Map[String, String],
-                     assignTid: Option[String] = None)
-    extends Write with RequiresDistributionAndOrdering {
-  override def requiredDistribution(): Distribution =
-    Distributions.ordered(Array(keyAsc))
-  override def requiredOrdering(): Array[SortOrder] = Array(keyAsc)
-  override def requiredNumPartitions(): Int = ranges
-  private def keyAsc: SortOrder =
-    Expressions.sort(Expressions.column("key"), SortDirection.ASCENDING)
-  override def toBatch: BatchWrite =
-    new KVBinWireBatchWrite(address, truncate, apiVersion, preserveMeta,
-      queryId, stats, deferSweep, userMeta, assignTid)
-}
-
+  * raw_put); a multi-endpoint destination is the sharded fleet write
+  * ([[KVBinFleetWireBatchWrite]]). */
 class KVBinWireBatchWrite(address: String, truncate: Boolean,
                           apiVersion: Option[String], preserveMeta: Boolean,
                           queryId: String, stats: Seq[(String, String)],
@@ -692,10 +752,7 @@ class KVBinWireBatchWrite(address: String, truncate: Boolean,
       KVBinDataWriter.jobTag(queryId), stats.map(_._2))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.collect {
-      case KVBinCommitMessage(f, mn, mx, n, lo, hi) if n > 0 =>
-        KVBinCommit.Fresh(f, KVBin.unhex(mn), KVBin.unhex(mx), n, lo, hi)
-    }.toSeq
+    val fresh = messages.toSeq.collect { case m: KVBinCommitMessage => m.fresh }.flatten
     new SocketRegionClient(address).commitWrite(truncate, apiVersion,
       preserveMeta, stats, deferSweep, userMeta, plannedBase, fresh,
       assignTid)
@@ -713,82 +770,41 @@ class KVBinWireWriterFactory(address: String, jobTag: String,
     new KVBinWireDataWriter(address, jobTag, partitionId, taskId, statSpecs)
 }
 
-/** Streams one sorted partition to the store as a PUT request — the
+/** Streams one sorted partition to the store as ONE PUT request — the
   * socket twin of [[KVBinDataWriter]]: same attempt-unique name, same
-  * lazily-opened output (an empty partition dials nothing), same
-  * order-violation check, same client-side min/max/count/stat tracking
-  * (the commit manifest is the CLIENT's summary either way; the server
-  * only spools bytes). A task failure closes the socket without the
-  * terminator frame, and the server deletes the partial file — the
+  * lazily-opened output (an empty partition dials nothing), same record
+  * loop (the commit manifest is the CLIENT's summary either way; the
+  * server only spools bytes). A task failure closes the socket without
+  * the terminator frame, and the server deletes the partial file — the
   * wire analog of abort()'s attempt-file delete. */
 class KVBinWireDataWriter(address: String, jobTag: String,
                           partitionId: Int, taskId: Long,
                           statSpecs: Seq[String])
-    extends DataWriter[InternalRow] {
+    extends KVBinRegionWriter(partitionId, statSpecs) {
 
   private val name = f"part-$partitionId%05d-$jobTag-$taskId.kv"
-  private var sock: java.net.Socket = _
-  private var out: DataOutputStream = _
-  private var in: java.io.DataInputStream = _
-  private var minK: Array[Byte] = _
-  private var prevK: Array[Byte] = _
-  private var n = 0L
-  private val sLo = Array.fill(statSpecs.size)(Long.MaxValue)
-  private val sHi = Array.fill(statSpecs.size)(Long.MinValue)
+  private var put: KVBinPut = _
 
-  override def write(row: InternalRow): Unit = {
-    val k = row.getBinary(0)
-    val v = row.getBinary(1)
-    if (out == null) {
-      val Array(host, port) = address.split(":", 2)
-      sock = new java.net.Socket()
-      sock.connect(new java.net.InetSocketAddress(host, port.toInt), 10000)
-      sock.setSoTimeout(60000)
-      out = new DataOutputStream(new BufferedOutputStream(
-        sock.getOutputStream, 1 << 16))
-      in = new java.io.DataInputStream(sock.getInputStream)
-      out.write(s"PUT $name\n".getBytes("UTF-8"))
-      minK = k
-    }
-    require(prevK == null || KVBin.compare(prevK, k) <= 0,
-      s"kvbin wire write received out-of-order key in partition $partitionId")
-    out.writeInt(k.length); out.write(k)
-    out.writeInt(v.length); out.write(v)
-    var i = 0
-    while (i < statSpecs.size) {
-      val x = KVBinStat.eval(statSpecs(i), k, v)
-      if (x < sLo(i)) sLo(i) = x
-      if (x > sHi(i)) sHi(i) = x
-      i += 1
-    }
-    prevK = k
-    n += 1
+  override protected def streamFor(k: Array[Byte]): DataOutputStream = {
+    if (put == null) put = new KVBinPut(address, name)
+    put.out
   }
 
   override def commit(): WriterCommitMessage = {
-    if (out != null) {
-      out.writeInt(-1) // terminator: the server closes + acks the file
-      out.flush()
-      val ack = in.readByte()
-      sock.close()
-      require(ack == 1, s"kvbin wire PUT of $name refused by $address")
-    }
-    KVBinCommitMessage(name,
-      if (minK == null) "" else KVBin.hexOf(minK),
-      if (prevK == null) "" else KVBin.hexOf(prevK), n,
-      sLo.toSeq, sHi.toSeq)
+    if (put != null) put.finish()
+    regionMessage(name)
   }
 
-  override def abort(): Unit =
-    // no terminator: the server's PUT loop hits EOF and deletes the
-    // partial attempt file — nothing to reclaim client-side
-    if (sock != null) sock.close()
-
-  override def close(): Unit = ()
+  override def abort(): Unit = if (put != null) put.abort()
 }
 
+/** One task's fleet manifest: the acked (storeIdx, segment manifest)
+  * pairs, in key order. */
+case class KVBinFleetCommitMessage(segments: Seq[(Int, KVBinCommitMessage)])
+    extends WriterCommitMessage
+
 /** SHARDED fleet wire write (r14) — the multi-store twin of
-  * [[KVBinWireWrite]], closing the r13 seam where a replica could only
+  * [[KVBinWireBatchWrite]], closing the r13 seam where a replica could only
   * land on ONE store: the reference's whole purpose is
   * cluster-to-cluster parity (`cmd/main.go:17-18`), and a TiKV-shaped
   * destination spreads regions across store nodes by key range (PD's
@@ -820,29 +836,6 @@ class KVBinWireDataWriter(address: String, jobTag: String,
   *    idempotent). A coordinator log would close even that window —
   *    the metastore's job in a real deployment, as the class doc of
   *    [[KVBinWriteBuilder]] already assigns it. */
-class KVBinFleetWireWrite(stores: IndexedSeq[KVBinFleet.Store],
-                          truncate: Boolean, ranges: Int,
-                          apiVersion: Option[String], preserveMeta: Boolean,
-                          queryId: String, stats: Seq[(String, String)],
-                          deferSweep: Boolean, userMeta: Map[String, String],
-                          assignTid: Option[String] = None)
-    extends Write with RequiresDistributionAndOrdering {
-  override def requiredDistribution(): Distribution =
-    Distributions.ordered(Array(keyAsc))
-  override def requiredOrdering(): Array[SortOrder] = Array(keyAsc)
-  override def requiredNumPartitions(): Int = ranges
-  private def keyAsc: SortOrder =
-    Expressions.sort(Expressions.column("key"), SortDirection.ASCENDING)
-  override def toBatch: BatchWrite =
-    new KVBinFleetWireBatchWrite(stores, truncate, apiVersion, preserveMeta,
-      queryId, stats, deferSweep, userMeta, assignTid)
-}
-
-/** One task's fleet manifest: the acked (storeIdx, segment manifest)
-  * pairs, in key order. */
-case class KVBinFleetCommitMessage(segments: Seq[(Int, KVBinCommitMessage)])
-    extends WriterCommitMessage
-
 class KVBinFleetWireBatchWrite(stores: IndexedSeq[KVBinFleet.Store],
                                truncate: Boolean, apiVersion: Option[String],
                                preserveMeta: Boolean, queryId: String,
@@ -987,8 +980,7 @@ class KVBinFleetWireBatchWrite(stores: IndexedSeq[KVBinFleet.Store],
     val perStore: Map[Int, Seq[KVBinCommit.Fresh]] = messages.toSeq
       .collect { case m: KVBinFleetCommitMessage => m.segments }
       .flatten
-      .collect { case (i, KVBinCommitMessage(f, mn, mx, n, lo, hi)) if n > 0 =>
-        (i, KVBinCommit.Fresh(f, KVBin.unhex(mn), KVBin.unhex(mx), n, lo, hi)) }
+      .flatMap { case (i, m) => m.fresh.map(i -> _) }
       .groupMap(_._1)(_._2)
     // PREPARE: every store reachable and (appends) still at its planned
     // base — no COMMIT is issued anywhere until the whole fleet passes,
@@ -1108,71 +1100,31 @@ class KVBinFleetWireWriterFactory(stores: IndexedSeq[KVBinFleet.Store],
 class KVBinFleetWireDataWriter(stores: IndexedSeq[KVBinFleet.Store],
                                jobTag: String, partitionId: Int, taskId: Long,
                                statSpecs: Seq[String])
-    extends DataWriter[InternalRow] {
+    extends KVBinRegionWriter(partitionId, statSpecs) {
 
   private var storeIdx = 0
   private var seg = 0
-  private var sock: java.net.Socket = _
-  private var out: DataOutputStream = _
-  private var in: java.io.DataInputStream = _
-  private var name: String = _
-  private var minK: Array[Byte] = _
-  private var prevK: Array[Byte] = _
-  private var n = 0L
-  private var sLo: Array[Long] = _
-  private var sHi: Array[Long] = _
+  private var put: KVBinPut = _
   private val acked =
     scala.collection.mutable.Buffer.empty[(Int, KVBinCommitMessage)]
 
-  private def openSegment(owner: Int, firstKey: Array[Byte]): Unit = {
-    storeIdx = owner
-    name = f"part-$partitionId%05d-$jobTag-$taskId-$seg.kv"
-    val Array(host, port) = stores(owner).address.split(":", 2)
-    sock = new java.net.Socket()
-    sock.connect(new java.net.InetSocketAddress(host, port.toInt), 10000)
-    sock.setSoTimeout(60000)
-    out = new DataOutputStream(new BufferedOutputStream(
-      sock.getOutputStream, 1 << 16))
-    in = new java.io.DataInputStream(sock.getInputStream)
-    out.write(s"PUT $name\n".getBytes("UTF-8"))
-    minK = firstKey
-    n = 0L
-    sLo = Array.fill(statSpecs.size)(Long.MaxValue)
-    sHi = Array.fill(statSpecs.size)(Long.MinValue)
-  }
-
-  private def closeSegment(): Unit = if (out != null) {
-    out.writeInt(-1)
-    out.flush()
-    val ack = in.readByte()
-    sock.close()
-    require(ack == 1,
-      s"kvbin fleet PUT of $name refused by ${stores(storeIdx).address}")
-    acked += ((storeIdx, KVBinCommitMessage(name, KVBin.hexOf(minK),
-      KVBin.hexOf(prevK), n, sLo.toSeq, sHi.toSeq)))
-    seg += 1
-    out = null; in = null; sock = null
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val k = row.getBinary(0)
-    val v = row.getBinary(1)
-    require(prevK == null || KVBin.compare(prevK, k) <= 0,
-      s"kvbin fleet write received out-of-order key in partition $partitionId")
+  override protected def streamFor(k: Array[Byte]): DataOutputStream = {
     val owner = KVBinFleet.ownerFrom(stores, storeIdx, k)
-    if (out != null && owner != storeIdx) closeSegment()
-    if (out == null) openSegment(owner, k)
-    out.writeInt(k.length); out.write(k)
-    out.writeInt(v.length); out.write(v)
-    var i = 0
-    while (i < statSpecs.size) {
-      val x = KVBinStat.eval(statSpecs(i), k, v)
-      if (x < sLo(i)) sLo(i) = x
-      if (x > sHi(i)) sHi(i) = x
-      i += 1
+    if (put != null && owner != storeIdx) closeSegment()
+    if (put == null) {
+      storeIdx = owner
+      put = new KVBinPut(stores(owner).address,
+        f"part-$partitionId%05d-$jobTag-$taskId-$seg.kv")
+      startRegion()
     }
-    prevK = k
-    n += 1
+    put.out
+  }
+
+  private def closeSegment(): Unit = if (put != null) {
+    put.finish()
+    acked += ((storeIdx, regionMessage(put.name)))
+    seg += 1
+    put = null
   }
 
   override def commit(): WriterCommitMessage = {
@@ -1183,14 +1135,12 @@ class KVBinFleetWireDataWriter(stores: IndexedSeq[KVBinFleet.Store],
   override def abort(): Unit = {
     // open segment: no terminator — the server's PUT loop hits EOF and
     // deletes the partial file; acked segments: reclaim by name
-    if (sock != null) sock.close()
+    if (put != null) put.abort()
     acked.groupMap(_._1)(_._2.file).foreach { case (i, files) =>
       try new SocketRegionClient(stores(i).address).abortWrite(files.toSeq)
       catch { case scala.util.control.NonFatal(_) => () }
     }
   }
-
-  override def close(): Unit = ()
 }
 
 /** Region-merge compaction — the connector's analog of TiKV's region

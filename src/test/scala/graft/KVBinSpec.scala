@@ -601,7 +601,9 @@ class KVBinSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("kvbin-multi-").toString
     val regions = KVBin.write(data, dir, 4).map(_._1)
     assert(regions.size > 1, "fixture must split into several regions")
-    def parity(id: String) = id.filter(_.isDigit).toLong % 2
+    def parity(id: String) = id match {
+      case graft.sources.kvbin.KVBinDataWriter.RegionFile(p) => p.toLong % 2
+    }
     val even = new KVBinServer(dir, spark.sessionState.newHadoopConf(), parity(_) == 0)
     val odd = new KVBinServer(dir, spark.sessionState.newHadoopConf(), parity(_) == 1)
     try {
@@ -657,6 +659,70 @@ class KVBinSpec extends SparkTestBase {
   }
 
   private def kvbinFmt = classOf[graft.sources.kvbin.KVBinSource].getName
+
+  test("KVBin.write over a live table: fresh region names, old generation swept") {
+    val data = Seq.tabulate(400)(i => (f"rw_$i%04d".getBytes("UTF-8"),
+      s"v$i".getBytes("UTF-8"))).toDF("key", "value")
+    val dir = java.nio.file.Files.createTempDirectory("kvbin-rw-").toString
+    val oldNames = KVBin.write(data, dir, 4).map(_._1).toSet
+    assert(oldNames.size === 4, s"fixture must split into 4 regions: $oldNames")
+    val newNames = KVBin.write(data, dir, 2).map(_._1).toSet
+    assert(newNames.size === 2)
+    // a rewrite must never truncate a file the live index still names,
+    // and the regions the new index drops must not outlive the swap
+    assert((newNames & oldNames).isEmpty,
+      s"rewrite reused live region names: ${newNames & oldNames}")
+    val onDisk = new java.io.File(dir).list().filter(_.endsWith(".kv")).toSet
+    assert(onDisk === newNames, s"region files on disk beyond the index: ${onDisk -- newNames}")
+    assert(KVBin.read(spark, dir).count() === 400)
+    // an empty rewrite leaves an empty table; an empty write to a path
+    // that does not exist yet creates one
+    assert(KVBin.write(data.limit(0), dir, 2).isEmpty)
+    assert(!new java.io.File(dir).list().exists(_.endsWith(".kv")))
+    val fresh = java.nio.file.Files.createTempDirectory("kvbin-rw0-").resolve("t").toString
+    assert(KVBin.write(data.limit(0), fresh, 2).isEmpty)
+    assert(KVBin.read(spark, fresh).count() === 0)
+  }
+
+  test("DSv2 write refuses a column that is not key, value, a declared stat or __cluster") {
+    val dir = java.nio.file.Files.createTempDirectory("kvbin-col-").toString
+    val kv = Seq(("k".getBytes("UTF-8"), "v".getBytes("UTF-8"), 7L))
+    def rootChain(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    val e = intercept[Exception] {
+      kv.toDF("key", "value", "extra").write.format(kvbinFmt)
+        .option("path", dir).mode("overwrite").save()
+    }
+    assert(rootChain(e).exists(m => m != null && m.contains("unexpected column extra")),
+      rootChain(e).mkString(" | "))
+    // the placement column is accepted (and never stored)
+    kv.toDF("key", "value", "__cluster").write.format(kvbinFmt)
+      .option("path", dir).mode("overwrite").save()
+    assert(KVBin.read(spark, dir).columns.toSeq === Seq("key", "value"))
+    assert(KVBin.read(spark, dir).count() === 1)
+  }
+
+  test("__cluster placement steers the path write and the wire write alike") {
+    import graft.sources.kvbin.KVBinServer
+    val conf = spark.sessionState.newHadoopConf()
+    // cluster = key parity: two regions that interleave in key space,
+    // where key placement would give two disjoint key ranges
+    val kv = Seq.tabulate(200)(i => (f"zc_$i%04d".getBytes("UTF-8"),
+      s"v$i".getBytes("UTF-8"), (i % 2).toLong)).toDF("key", "value", "__cluster")
+    def interleaved(idx: Seq[(String, Array[Byte], Array[Byte], Long)]): Boolean =
+      idx.size == 2 && KVBin.compare(idx(1)._2, idx(0)._3) < 0
+    val dir = java.nio.file.Files.createTempDirectory("kvbin-zc-").toString
+    assert(interleaved(KVBin.write(kv, dir, 2)))
+    assert(!interleaved(KVBin.write(kv.drop("__cluster"), dir, 2)))
+    val wdir = java.nio.file.Files.createTempDirectory("kvbin-zcw-").toString
+    val server = new KVBinServer(wdir, conf)
+    try {
+      kv.write.format(kvbinFmt).option("endpoints", server.address)
+        .option("ranges", "2").mode("overwrite").save()
+      assert(interleaved(KVBin.readIndex(wdir, conf)))
+    } finally server.close()
+    assert(KVBin.read(spark, wdir).count() === 200)
+  }
 
   test("DSv2 write: overwrite roundtrip is checksum-identical; regions are disjoint sorted ranges") {
     val dir = java.nio.file.Files.createTempDirectory("kvbin-w-").toString
