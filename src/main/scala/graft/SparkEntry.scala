@@ -2909,18 +2909,9 @@ object SparkEntry {
         .select(col("key"), col("src_value").as("value"))
       val inss = d.filter(col("dst_value").isNotNull)
         .select(col("key"), col("dst_value").as("value"))
-      val derived = Checksum.applyDelta(Checksum.of(src), dels, inss)
-        .select(col("crc64_xor").as("derived_crc64_xor"),
-          col("total_kvs").as("derived_total_kvs"),
-          col("total_bytes").as("derived_total_bytes"))
-      val direct = Checksum.of(dst)
-        .select(col("crc64_xor").as("direct_crc64_xor"),
-          col("total_kvs").as("direct_total_kvs"),
-          col("total_bytes").as("direct_total_bytes"))
-      derived.crossJoin(direct).withColumn("matches",
-        col("derived_crc64_xor") === col("direct_crc64_xor") &&
-        col("derived_total_kvs") === col("direct_total_kvs") &&
-        col("derived_total_bytes") === col("direct_total_bytes"))
+      Checksum.sided(Checksum.applyDelta(Checksum.of(src), dels, inss), "derived")
+        .crossJoin(Checksum.sided(Checksum.of(dst), "direct"))
+        .withColumn("matches", Checksum.matches("derived", "direct"))
     }),
     // §2a row 10: diff = full-outer join on key, classified
     "q_diff" -> ((s, dir) =>

@@ -65,17 +65,13 @@ object Diff {
     def bucketOf(key: Column): Column =
       pmod(xxhash64(key.cast("binary")), lit(buckets.toLong))
     def digest(kv: DataFrame, side: String): DataFrame =
-      Checksum.byBucket(
+      Checksum.sided(Checksum.byBucket(
           kv.select(col("key").cast("binary").as("key"),
             col("value").cast("binary").as("value")),
-          bucketOf(col("key")))
-        .select(col("bucket"), col("crc64_xor").as(s"${side}_crc"),
-          col("total_kvs").as(s"${side}_kvs"), col("total_bytes").as(s"${side}_bytes"))
+          bucketOf(col("key"))), side, "bucket")
     val changed = digest(src, "src").join(digest(dst, "dst"), Seq("bucket"), "full_outer")
-      .filter(col("src_crc").isNull || col("dst_crc").isNull ||
-        col("src_crc") =!= col("dst_crc") ||
-        col("src_kvs") =!= col("dst_kvs") ||
-        col("src_bytes") =!= col("dst_bytes"))
+      .filter(col("src_crc64_xor").isNull || col("dst_crc64_xor").isNull ||
+        !Checksum.matches("src", "dst"))
       .select(col("bucket").as("__bucket"))
     // a row with a null key or value has no crc64 digest (the checksum
     // excludes it from all three components), so no bucket mismatch can

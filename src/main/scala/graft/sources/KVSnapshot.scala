@@ -205,16 +205,18 @@ object KVSnapshot {
 
   /** src-vs-dst checksum verdict where BOTH sides' digests are pushed
     * per-region triples from live servers (src: two-store fleet; dst:
-    * its own store), merged concurrently — the reference's §3.1
-    * flagship lifecycle (`checksum/checksum.go:140-178`) end-to-end
-    * over wires. Result ≡ `Checksum.verdict(src, dst)`. */
+    * its own store), folded by one aggregate whose job runs both sides'
+    * CHECKSUM RPCs — the reference's §3.1 flagship lifecycle
+    * (`checksum/checksum.go:140-178`) end-to-end over wires. Result ≡
+    * `Checksum.verdict(src, dst)`. */
   def binSocketVerdict(spark: SparkSession, dir: String): DataFrame = {
+    import graft.sources.kvbin.KVBinChecksum.regionTriples
     val (srcPath, srcEndpoints) = srcBinMultiEndpoints(spark, dir)
     val dstPath = dstBinPath(spark, dir)
     val dstServer = serverFor(spark, dstPath)
-    graft.functions.Checksum.verdictConcurrentFromTriples(
-      graft.sources.kvbin.KVBinChecksum.pushed(spark, srcPath, Some(srcEndpoints)),
-      graft.sources.kvbin.KVBinChecksum.pushed(spark, dstPath, Some(dstServer.address)))
+    graft.functions.Checksum.verdictFromTriples(
+      regionTriples(spark, srcPath, Some(srcEndpoints)),
+      regionTriples(spark, dstPath, Some(dstServer.address)))
   }
 
   /** Range-filter a KV frame to `[startKey, endKey)` — BinaryType

@@ -1,8 +1,9 @@
 package graft.sources.kvbin
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
+
+import graft.functions.Checksum
 
 /** Cluster-side (pushed) checksum over a kvbin source — the engine form
   * of the reference's flagship bandwidth win: the CRC64 fold runs
@@ -18,17 +19,18 @@ import org.apache.spark.util.SerializableConfiguration
   * the driver lists regions (the PD metadata scan), a tiny Spark job
   * fans one RPC per region across executors — the reference's
   * worker-pool fan-out (`checksum/checksum.go:78-95`) — and Catalyst
-  * folds the triples through the XOR/sum/sum monoid. At 100 TB this
-  * moves 24 bytes per region instead of the region: the shuffle input
-  * is O(#regions), not O(data). */
+  * folds the triples through the XOR/sum/sum monoid ([[Checksum.fold]]).
+  * At 100 TB this moves 24 bytes per region instead of the region: the
+  * shuffle input is O(#regions), not O(data). */
 object KVBinChecksum {
 
-  /** One-row `(crc64_xor, total_kvs, total_bytes)` frame for the whole
-    * source, computed from per-region server-side triples. Identical
-    * result (and column contract) to `Checksum.of` over the same
-    * snapshot — the oracle for both is the same SQL. */
-  def pushed(spark: SparkSession, dir: String,
-             endpoints: Option[String]): DataFrame = {
+  /** One `(crc64_xor, total_kvs, total_bytes)` row per region, each
+    * computed at the source by [[RegionClient.checksumRegion]] — the
+    * triple rows [[graft.functions.Checksum.verdictFromTriples]] takes,
+    * so a verdict over two pushed sides runs both sides' RPCs in one
+    * job. */
+  def regionTriples(spark: SparkSession, dir: String,
+                    endpoints: Option[String]): DataFrame = {
     val sconf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
     val client = RegionClient.connect(dir, endpoints, sconf)
     // driver-side planning: region enumeration (captures the owner map
@@ -42,10 +44,14 @@ object KVBinChecksum {
       .repartition(math.max(1, math.min(regionIds.size,
         spark.sparkContext.defaultParallelism)))
       .map(id => client.checksumRegion(id))
-      .toDF("crc64_xor", "total_kvs", "total_bytes")
-      .agg(
-        coalesce(expr("bit_xor(crc64_xor)"), lit(0L)).as("crc64_xor"),
-        coalesce(sum(col("total_kvs")), lit(0L)).as("total_kvs"),
-        coalesce(sum(col("total_bytes")), lit(0L)).as("total_bytes"))
+      .toDF()
   }
+
+  /** One-row `(crc64_xor, total_kvs, total_bytes)` frame for the whole
+    * source, computed from per-region server-side triples. Identical
+    * result (and column contract) to `Checksum.of` over the same
+    * snapshot — the oracle for both is the same SQL. */
+  def pushed(spark: SparkSession, dir: String,
+             endpoints: Option[String]): DataFrame =
+    Checksum.fold(regionTriples(spark, dir, endpoints))
 }

@@ -6,6 +6,8 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.hadoop.conf.Configuration
 
+import graft.functions.RawChecksum
+
 /** The kvbin protocol over a real socket — the network half of the
   * connector's live-source seam. The reference actually dials PD and
   * the store nodes over gRPC (`scan/scan.go:45` opens a client against
@@ -340,14 +342,9 @@ class KVBinServer(dir: String, conf: Configuration,
             // the server-side fold (`checksum/checksum.go:83`'s RPC body):
             // stream the region file through the CRC64 monoid locally and
             // answer with the triple — 24 bytes regardless of region size
-            var crc = 0L; var kvs = 0L; var bytes = 0L
-            KVBin.readFile(dir, id, conf).foreach { case (k, v) =>
-              crc ^= graft.functions.Crc64.crc64(k, v)
-              kvs += 1L
-              bytes += k.length.toLong + v.length.toLong
-            }
+            val c = RawChecksum.fold(KVBin.readFile(dir, id, conf))
             out.writeByte(1)
-            out.writeLong(crc); out.writeLong(kvs); out.writeLong(bytes)
+            out.writeLong(c.crc64_xor); out.writeLong(c.total_kvs); out.writeLong(c.total_bytes)
           } else out.writeByte(0)
         case put if put.startsWith("PUT ") =>
           putRequests.incrementAndGet()
@@ -660,12 +657,12 @@ class SocketRegionClient(address: String) extends RegionClient {
   /** The wire form of the server-side checksum: one CHECKSUM request,
     * 25 response bytes, no region data on the wire — the socket twin of
     * the reference's `rawkv.Checksum` RPC (`checksum/checksum.go:83-91`). */
-  override def checksumRegion(regionId: String): (Long, Long, Long) =
+  override def checksumRegion(regionId: String): RawChecksum =
     dial(s"CHECKSUM $regionId") { in =>
       if (in.readByte() != 1)
         throw new IllegalArgumentException(
           s"region $regionId not served by $address")
-      (in.readLong(), in.readLong(), in.readLong())
+      RawChecksum(in.readLong(), in.readLong(), in.readLong())
     }
 
   /** This store's owned write key range ([min, max), empty = unbounded
@@ -849,6 +846,6 @@ class MultiSocketRegionClient(addresses: Seq[String]) extends RegionClient {
 
   override def scanRegion(regionId: String): Iterator[(Array[Byte], Array[Byte])] =
     ownerOf(regionId).scanRegion(regionId)
-  override def checksumRegion(regionId: String): (Long, Long, Long) =
+  override def checksumRegion(regionId: String): RawChecksum =
     ownerOf(regionId).checksumRegion(regionId)
 }

@@ -2,6 +2,8 @@ package graft.sources.kvbin
 
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.functions.RawChecksum
+
 /** One region's placement metadata: id (the scan handle), key bounds,
   * record count, serialized byte size — what a PD `GetAllRegions` row
   * carries (`checksum/checksum.go:52-57`'s region enumeration; PD's
@@ -43,22 +45,15 @@ trait RegionClient extends Serializable {
   def listRegions(): Seq[RegionInfo]
   /** Key-ordered records of one region. Executor-side. */
   def scanRegion(regionId: String): Iterator[(Array[Byte], Array[Byte])]
-  /** One region's checksum triple `(crc64_xor, total_kvs, total_bytes)`
-    * computed AT THE SOURCE — the reference's server-side checksum RPC
-    * (`checksum/checksum.go:83`: the client receives three longs per
-    * range, never the range's bytes). The default folds the local scan
-    * (bit-identical semantics) for clients whose source already IS
-    * local; network clients override with the wire verb so region bytes
-    * never cross the wire. Executor-side. */
-  def checksumRegion(regionId: String): (Long, Long, Long) = {
-    var crc = 0L; var kvs = 0L; var bytes = 0L
-    scanRegion(regionId).foreach { case (k, v) =>
-      crc ^= graft.functions.Crc64.crc64(k, v)
-      kvs += 1L
-      bytes += k.length.toLong + v.length.toLong
-    }
-    (crc, kvs, bytes)
-  }
+  /** One region's checksum triple computed AT THE SOURCE — the
+    * reference's server-side checksum RPC (`checksum/checksum.go:83`:
+    * the client receives three longs per range, never the range's
+    * bytes). The default folds the local scan (bit-identical semantics)
+    * for clients whose source already IS local; network clients
+    * override with the wire verb so region bytes never cross the wire.
+    * Executor-side. */
+  def checksumRegion(regionId: String): RawChecksum =
+    RawChecksum.fold(scanRegion(regionId))
 }
 
 object RegionClient {

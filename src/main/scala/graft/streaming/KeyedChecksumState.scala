@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.{DataFrame, Dataset}
 
-import graft.functions.{Crc64, RawChecksum}
+import graft.functions.RawChecksum
 
 /** Custom streaming state via `mapGroupsWithState`: a continuously
   * maintained checksum triple PER KEY GROUP over a stream of KV change
@@ -22,12 +22,10 @@ object KeyedChecksumState {
   case class KVRecord(group: String, key: Array[Byte], value: Array[Byte])
   case class GroupChecksum(group: String, crc64_xor: Long, total_kvs: Long, total_bytes: Long)
 
-  private def fold(state: RawChecksum, recs: Iterator[KVRecord]): RawChecksum =
-    recs.foldLeft(state)((acc, r) => acc.merge(RawChecksum.of(r.key, r.value)))
-
   def update(group: String, recs: Iterator[KVRecord],
              state: GroupState[RawChecksum]): GroupChecksum = {
-    val merged = fold(state.getOption.getOrElse(RawChecksum.zero), recs)
+    val merged = RawChecksum.fold(recs.map(r => (r.key, r.value)),
+      state.getOption.getOrElse(RawChecksum.zero))
     state.update(merged)
     GroupChecksum(group, merged.crc64_xor, merged.total_kvs, merged.total_bytes)
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.Checksum
 import graft.operators.{Events, TextAnalysis}
 import graft.sources.KVSnapshot
 
@@ -2144,7 +2145,7 @@ object StreamEntries {
     implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
     val name = fresh("graft_stream_kvbin_verdict")
     withStatePartitions(s, 1, noData = false) {
-      val q = graft.functions.Checksum.byBucket(
+      val q = Checksum.byBucket(
           s.readStream.format(fmt).option("path", srcTbl).load(), bucketOf)
         .writeStream.format("memory").queryName(name)
         .outputMode("complete").start()
@@ -2153,23 +2154,11 @@ object StreamEntries {
         writeWave(w2, "append") // batch 2: appended regions fold in
       }
     }
-    val srcB = takeTable(s, name).select(col("bucket"),
-      col("crc64_xor").as("src_crc64_xor"),
-      col("total_kvs").as("src_total_kvs"),
-      col("total_bytes").as("src_total_bytes"))
-    val dstB = graft.functions.Checksum.byBucket(
-        s.read.format(fmt).option("path", dstTbl).load(), bucketOf)
-      .select(col("bucket"), col("crc64_xor").as("dst_crc64_xor"),
-        col("total_kvs").as("dst_total_kvs"),
-        col("total_bytes").as("dst_total_bytes"))
+    val srcB = Checksum.sided(takeTable(s, name), "src", "bucket")
+    val dstB = Checksum.sided(Checksum.byBucket(
+      s.read.format(fmt).option("path", dstTbl).load(), bucketOf), "dst", "bucket")
     srcB.join(dstB, Seq("bucket"), "full_outer")
-      .select(col("bucket"), col("src_crc64_xor"), col("src_total_kvs"),
-        col("src_total_bytes"), col("dst_crc64_xor"),
-        col("dst_total_kvs"), col("dst_total_bytes"),
-        coalesce(col("src_crc64_xor") === col("dst_crc64_xor") &&
-          col("src_total_kvs") === col("dst_total_kvs") &&
-          col("src_total_bytes") === col("dst_total_bytes"),
-          lit(false)).as("matches"))
+      .withColumn("matches", coalesce(Checksum.matches("src", "dst"), lit(false)))
       .orderBy(col("bucket"))
   }
 

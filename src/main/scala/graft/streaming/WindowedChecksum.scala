@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.Crc64Expr.crc64Pair
+import graft.functions.Checksum
 
 /** Continuous-compare building block: the reference's checksum triple
   * (`checksum/checksum.go:25-29`) per event-time window, so two live KV
@@ -25,14 +25,7 @@ object WindowedChecksum {
   def apply(kv: DataFrame, tsCol: String, windowDur: String,
             watermark: Option[String] = None): DataFrame = {
     val in = watermark.fold(kv)(w => kv.withWatermark(tsCol, w))
-    in.select(window(col(tsCol), windowDur).as("w"),
-        crc64Pair(col("key"), col("value")).as("__crc"),
-        (length(col("key")).cast("long") + length(col("value")).cast("long")).as("__len"))
-      .groupBy(col("w"))
-      .agg(
-        expr("bit_xor(__crc)").as("crc64_xor"),
-        count(col("__crc")).as("total_kvs"),
-        sum(col("__len")).as("total_bytes"))
+    Checksum.fold(Checksum.triples(in, window(col(tsCol), windowDur).as("w")), col("w"))
       .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
         col("crc64_xor"), col("total_kvs"), col("total_bytes"))
   }
