@@ -311,15 +311,20 @@ object KVBin {
   def readMeta(dir: String, conf: Configuration): Map[String, String] =
     readAll(dir, conf)._1
 
-  /** Iterate one region file's records. */
-  def readFile(dir: String, name: String, conf: Configuration): Iterator[(Array[Byte], Array[Byte])] = {
+  /** Iterate one region file's records. The stream closes at EOF; a
+    * reader that stops early (range end, pushed limit) closes it through
+    * the iterator's `close()`, which is idempotent. */
+  def readFile(dir: String, name: String, conf: Configuration)
+      : Iterator[(Array[Byte], Array[Byte])] with java.io.Closeable = {
     val fs = FileSystem.get(new java.net.URI(dir), conf)
     val in = new DataInputStream(new BufferedInputStream(
       fs.open(new Path(dir, name)), 1 << 16))
-    new Iterator[(Array[Byte], Array[Byte])] {
+    new Iterator[(Array[Byte], Array[Byte])] with java.io.Closeable {
+      private var open = true
+      override def close(): Unit = if (open) { open = false; in.close() }
       private var nextRec: (Array[Byte], Array[Byte]) = advance()
       private def advance(): (Array[Byte], Array[Byte]) = {
-        val klen = try in.readInt() catch { case _: java.io.EOFException => in.close(); return null }
+        val klen = try in.readInt() catch { case _: java.io.EOFException => close(); return null }
         val k = new Array[Byte](klen); in.readFully(k)
         val v = new Array[Byte](in.readInt()); in.readFully(v)
         (k, v)
@@ -342,6 +347,8 @@ object KVBin {
     }
     a.length - b.length
   }
+  /** [[compare]] as an `Ordering`: unsigned-lex key order. */
+  val keyOrder: Ordering[Array[Byte]] = compare(_, _)
 
   /** Convenience: read a kvbin dir through the DSv2 connector. */
   def read(spark: SparkSession, dir: String): DataFrame =

@@ -15,7 +15,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** DataSource V2 connector over [[KVBin]] region files — the engine's
   * stand-in for a live TiKV connector (SURVEY §2a rows 1-2): partition
   * planning enumerates the region index (≙ PD region metadata scan,
-  * `checksum/checksum.go:52-57`) and key-range predicates push down to
+  * `checksum/checksum.go:52-57`) and packs the surviving regions into
+  * Spark-sized input partitions, and key-range predicates push down to
   * BOTH file pruning (regions outside `[start,end)` are never opened)
   * and in-reader range scoping (≙ the server-side bounded Scan,
   * `scan/scan.go:45`). Pushed range filters are consumed entirely —
@@ -240,8 +241,8 @@ class KVBinTable(dir: String, tableEndpoints: Option[String] = None)
   * region: record count, first key, last key (the index stores all
   * three; over the socket they arrive in the REGIONS metadata reply).
   * A pushed aggregate turns a "scan everything" plan into one that
-  * ships three values per region — the planner-integrated sibling of
-  * the protocol-level CHECKSUM verb. */
+  * ships three values per input partition (a key run of regions) — the
+  * planner-integrated sibling of the protocol-level CHECKSUM verb. */
 sealed trait KVBinAgg extends Serializable
 object KVBinAgg {
   case object CountAll extends KVBinAgg
@@ -257,8 +258,8 @@ object KVBinAgg {
 /** Accepts unsigned-lex range predicates on `key` and column pruning;
   * everything else stays with Spark as a post-scan filter. Whole-table
   * COUNT / MIN(key) / MAX(key) aggregates push down to the region
-  * index (partial pushdown: one row per region, Spark folds the
-  * final merge — sum of counts, min of mins, max of maxes). */
+  * index (partial pushdown: one row per input partition, Spark folds
+  * the final merge — sum of counts, min of mins, max of maxes). */
 class KVBinScanBuilder(dir: String, expectedApiVersion: Option[String] = None,
                        endpoints: Option[String] = None,
                        statDefs: Seq[(String, String)] = Nil,
@@ -392,6 +393,9 @@ class KVBinScan(dir: String, start: Array[Byte], end: Array[Byte],
                 statBounds: Seq[StatBound] = Nil)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
+  /** The session executing the scan: its hadoop conf ships to readers,
+    * its `spark.sql.files.*` settings size the input partitions. */
+  private def session = org.apache.spark.sql.SparkSession.active
   /** The session's hadoop configuration, shipped to readers —
     * executor-side `FileSystem.get` must see the cluster's FS settings
     * and credentials, not a default `Configuration()`. Resolved LAZILY
@@ -401,15 +405,32 @@ class KVBinScan(dir: String, start: Array[Byte], end: Array[Byte],
     * active session's per-session `spark.hadoop.*` overrides to a query
     * owned by a different session. */
   private lazy val conf = new org.apache.spark.util.SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .getOrElse(org.apache.spark.sql.SparkSession.active)
-      .sessionState.newHadoopConf())
+    session.sessionState.newHadoopConf())
   /** The cluster connection, behind the [[RegionClient]] seam — this is
     * the only line a live (network) source implementation changes. */
   private lazy val client = RegionClient.connect(dir, endpoints, conf)
   override def readSchema(): StructType =
     agg.fold(required)(cols => StructType(cols.map(KVBinAgg.field)))
   override def toBatch: Batch = this
+
+  /** Value equality over what the scan reads, so two scans built alike
+    * are one scan to the planner: `BatchScanExec` compares `batch`, and
+    * `toBatch` is this object, so `ReuseExchange` can share an exchange
+    * over equal scans — the bucket digest that `prune(src)` and
+    * `prune(dst)` both embed is computed once. The runtime key set stays
+    * out: it arrives after planning, `BatchScanExec` compares its
+    * runtime filters itself, and a hash must not change once planned. */
+  private lazy val identity = {
+    def bytes(b: Array[Byte]) = Option(b).map(_.toSeq)
+    (dir, bytes(start), bytes(end), bytes(endIncl), required,
+      expectedApiVersion, endpoints, agg, limit, statDefs, statBounds)
+  }
+  override def equals(o: Any): Boolean = o match {
+    case s: KVBinScan => identity == s.identity
+    case _ => false
+  }
+  override def hashCode(): Int = identity.hashCode
+
   override def description(): String = {
     def h(b: Array[Byte]) = if (b == null) "∅" else KVBin.hexOf(b)
     s"KVBinScan(dir=$dir, start=${h(start)}, end=${h(end)}, endIncl=${h(endIncl)}" +
@@ -473,8 +494,7 @@ class KVBinScan(dir: String, start: Array[Byte], end: Array[Byte],
     val rows = if (agg.isDefined) regions.size.toLong else regions.map(_.nKeys).sum
     val bytes =
       if (agg.isDefined) math.max(32L * regions.size, 1L)
-      else math.max(regions.map(r =>
-        if (r.bytes >= 0) r.bytes else r.nKeys * 64L).sum, 1L)
+      else math.max(regions.map(_.sizeBytes).sum, 1L)
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(bytes)
@@ -483,10 +503,45 @@ class KVBinScan(dir: String, start: Array[Byte], end: Array[Byte],
     }
   }
 
-  /** Region pruning: only files whose [min,max] intersects the pushed
-    * range become input partitions. The API-version gate runs first —
-    * a mismatched cluster fails the query at planning time, before any
-    * region file is opened (`checksum/checksum.go:134-137` analog). */
+  /** Packs regions into input partitions by Spark's file-source split
+    * rule: a region weighs its bytes (or 64 B per record when the client
+    * cannot size it) plus `spark.sql.files.openCostInBytes`, and a bin
+    * closes before the region that would take it past
+    * `FilePartition.maxSplitBytes` — `maxPartitionBytes`, lowered so the
+    * table spreads over `spark.sql.files.minPartitionNum` (default: the
+    * leaf-node parallelism). A bin over the cap holds one region. Unlike
+    * the file source, bins fill in KEY order (by `minKey`, stable), so a
+    * partition is a contiguous key run and a plain scan returns rows in
+    * key order. Why not a task per region: a Spark task has a fixed
+    * cost (scheduling, and deserializing the client's hadoop conf) that
+    * a small region's scan does not come near. */
+  private def packed(regions: Seq[RegionInfo]): Seq[Seq[RegionInfo]] = {
+    val spark = session
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val weighed = regions.sortBy(_.minKey)(KVBin.keyOrder)
+      .map(r => (r, r.sizeBytes + openCost))
+    val cap = org.apache.spark.sql.execution.datasources.FilePartition
+      .maxSplitBytes(spark, weighed.map(_._2).sum)
+    val bins = Seq.newBuilder[Seq[RegionInfo]]
+    var bin = Vector.empty[RegionInfo]
+    var binBytes = 0L
+    weighed.foreach { case (r, w) =>
+      if (bin.nonEmpty && binBytes + w > cap) {
+        bins += bin; bin = Vector.empty; binBytes = 0L
+      }
+      bin :+= r; binBytes += w
+    }
+    if (bin.nonEmpty) bins += bin
+    bins.result()
+  }
+
+  /** Region pruning, then packing: only regions whose [min,max]
+    * intersects the pushed range (and whose stat box meets the pushed
+    * stat ranges, and that hold a runtime key) are kept, and
+    * [[packed]] groups the survivors into input partitions. The
+    * API-version gate runs first — a mismatched cluster fails the query
+    * at planning time, before any region file is opened
+    * (`checksum/checksum.go:134-137` analog). */
   override def planInputPartitions(): Array[InputPartition] = {
     val sourceVersion = client.clusterMeta()("api_version")
     expectedApiVersion.filter(_ != sourceVersion).foreach { e =>
@@ -495,23 +550,25 @@ class KVBinScan(dir: String, start: Array[Byte], end: Array[Byte],
     }
     agg match {
       // pushed aggregate: the ANSWER is already in the region metadata
-      // — partitions carry three resolved values each, and no region is
-      // ever opened (readers never call scanRegion). pushAggregation
-      // rejects pushed key ranges, so prunedRegions == regionList here;
-      // using it anyway keeps the invariant local, and the require makes
-      // any future relaxation fail loudly instead of aggregating the
-      // whole table. Empty regions are skipped: their sentinel
-      // min/max bounds must not feed pushed MIN/MAX (COUNT is
+      // — a partition carries its bin's three folded values, and no
+      // region is ever opened (readers never call scanRegion).
+      // pushAggregation rejects pushed key ranges, so prunedRegions ==
+      // regionList here; using it anyway keeps the invariant local, and
+      // the require makes any future relaxation fail loudly instead of
+      // aggregating the whole table. Empty regions are skipped: their
+      // sentinel min/max bounds must not feed pushed MIN/MAX (COUNT is
       // unaffected — they contribute 0).
       case Some(cols) =>
         require(start == null && end == null && endIncl == null,
           "kvbin pushed aggregate planned with a pushed key range")
-        prunedRegions.filter(_.nKeys > 0).map { r =>
-          KVBinAggInputPartition(r.nKeys, r.minKey, r.maxKey, cols): InputPartition
+        packed(prunedRegions.filter(_.nKeys > 0)).map { bin =>
+          KVBinAggInputPartition(bin.map(_.nKeys).sum,
+            bin.map(_.minKey).min(KVBin.keyOrder),
+            bin.map(_.maxKey).max(KVBin.keyOrder), cols): InputPartition
         }.toArray
       case None =>
-        prunedRegions.map { r =>
-          KVBinInputPartition(client, r.id, start, end, endIncl,
+        packed(prunedRegions).map { bin =>
+          KVBinInputPartition(client, bin.map(_.id), start, end, endIncl,
             required.fieldNames, limit.getOrElse(-1),
             statDefs.toMap, statBounds): InputPartition
         }.toArray
@@ -859,7 +916,7 @@ class KVBinMicroBatchStream(dir: String, start: Array[Byte],
         regions.filter(r => target.contains(r.id) && !seen.contains(r.id))
     }
     due.filter(KVBinSource.inScope(_, start, end, endIncl, statBounds))
-      .map(r => KVBinInputPartition(client, r.id, start, end, endIncl,
+      .map(r => KVBinInputPartition(client, Seq(r.id), start, end, endIncl,
         required.fieldNames, -1, statDefs.toMap, statBounds): InputPartition)
       .toArray
   }
@@ -872,15 +929,20 @@ class KVBinMicroBatchStream(dir: String, start: Array[Byte],
   override def stop(): Unit = ()
 }
 
-case class KVBinInputPartition(client: RegionClient, regionId: String,
+/** A key-ordered run of regions, read one after another by one task.
+  * All of them share the one `client`, so its hadoop conf is serialized
+  * once per task, not once per region. The scope, stat bounds and
+  * partial limit apply to each region. */
+case class KVBinInputPartition(client: RegionClient, regionIds: Seq[String],
     start: Array[Byte], end: Array[Byte], endIncl: Array[Byte],
     columns: Array[String], limit: Int = -1,
     statSpecs: Map[String, String] = Map.empty,
     statBounds: Seq[StatBound] = Nil)
   extends InputPartition
 
-/** One region's pushed-aggregate row, fully resolved at planning time
-  * from the region index — the executor task materializes a single
+/** One bin of regions' pushed-aggregate row (count sum, min of the
+  * minimum keys, max of the maximum keys), fully resolved at planning
+  * time from the region index — the executor task materializes a single
   * pre-computed row. */
 case class KVBinAggInputPartition(nKeys: Long, minKey: Array[Byte],
     maxKey: Array[Byte], cols: Seq[KVBinAgg])
@@ -897,7 +959,7 @@ class KVBinReaderFactory extends PartitionReaderFactory {
 }
 
 /** Emits the one partial-aggregate row of a [[KVBinAggInputPartition]];
-  * Spark's final aggregate folds the per-region rows (sum/min/max). */
+  * Spark's final aggregate folds the per-bin rows (sum/min/max). */
 class KVBinAggPartitionReader(p: KVBinAggInputPartition)
     extends PartitionReader[InternalRow] {
   private var emitted = false
@@ -911,17 +973,38 @@ class KVBinAggPartitionReader(p: KVBinAggInputPartition)
   override def close(): Unit = ()
 }
 
-/** Streams one region through the [[RegionClient]] seam, scoped to the
-  * pushed range (records are key-sorted, so the reader stops at the
-  * range end) and projecting the pruned columns IN THE PRUNED SCHEMA'S
-  * ORDER — a (value, key)-ordered requiredSchema yields (value, key)
-  * rows, never silently swapped binary columns. */
+/** Streams a partition's regions, one after another, through the
+  * [[RegionClient]] seam, each scoped to the pushed range (records are
+  * key-sorted, so the reader leaves a region at the range end) and
+  * projecting the pruned columns IN THE PRUNED SCHEMA'S ORDER — a
+  * (value, key)-ordered requiredSchema yields (value, key) rows, never
+  * silently swapped binary columns. A region's iterator is closed as
+  * the reader leaves it, drained or not, and the open one on `close()`. */
 class KVBinPartitionReader(p: KVBinInputPartition) extends PartitionReader[InternalRow] {
-  private val it = p.client.scanRegion(p.regionId)
+  private val regions = p.regionIds.iterator
+  private var it: Iterator[(Array[Byte], Array[Byte])] = Iterator.empty
   private var current: (Array[Byte], Array[Byte]) = _
-  private var emitted = 0
+  private var emitted = 0 // rows of the current region
+
+  private def leaveRegion(): Unit = {
+    it match {
+      case c: java.io.Closeable => c.close()
+      case _ =>
+    }
+    it = Iterator.empty
+  }
 
   override def next(): Boolean = {
+    while (!nextInRegion()) {
+      leaveRegion()
+      if (!regions.hasNext) return false
+      it = p.client.scanRegion(regions.next())
+      emitted = 0
+    }
+    true
+  }
+
+  private def nextInRegion(): Boolean = {
     // pushed (partial) limit: the region is key-sorted, so its first
     // `limit` in-range rows are the only candidates — stop reading
     if (p.limit >= 0 && emitted >= p.limit) return false
@@ -931,7 +1014,7 @@ class KVBinPartitionReader(p: KVBinInputPartition) extends PartitionReader[Inter
       if (p.start == null || KVBin.compare(k, p.start) >= 0) {
         val pastEnd = (p.end != null && KVBin.compare(k, p.end) >= 0) ||
           (p.endIncl != null && KVBin.compare(k, p.endIncl) > 0)
-        if (pastEnd) return false // sorted file: nothing further can match
+        if (pastEnd) return false // sorted region: nothing further can match
         // pushed stat ranges: stats are NOT key-ordered, so an
         // out-of-range record is skipped, never a stop
         if (p.statBounds.forall { b =>
@@ -958,5 +1041,5 @@ class KVBinPartitionReader(p: KVBinInputPartition) extends PartitionReader[Inter
       }
     })
 
-  override def close(): Unit = ()
+  override def close(): Unit = leaveRegion()
 }

@@ -9,10 +9,13 @@ import graft.functions.RawChecksum
   * carries (`checksum/checksum.go:52-57`'s region enumeration; PD's
   * `approximate_size` is the `bytes` analog). `bytes = -1` means the
   * client cannot cheaply know it (in-memory test clients); consumers
-  * fall back to a per-record estimate. */
+  * read [[sizeBytes]], which falls back to a per-record estimate. */
 case class RegionInfo(id: String, minKey: Array[Byte], maxKey: Array[Byte],
                       nKeys: Long, bytes: Long = -1L,
-                      stats: Seq[(Long, Long)] = Nil)
+                      stats: Seq[(Long, Long)] = Nil) {
+  /** `bytes`, or 64 B per record when the client cannot size it. */
+  def sizeBytes: Long = if (bytes >= 0) bytes else nKeys * 64L
+}
 
 /** The connector's live-source seam — everything [[KVBinScan]] needs
   * from "the cluster", and nothing else:
@@ -43,7 +46,10 @@ trait RegionClient extends Serializable {
   def pollMeta(): Map[String, String] = clusterMeta()
   /** All regions, with key bounds for pruning. Driver-side, once per scan. */
   def listRegions(): Seq[RegionInfo]
-  /** Key-ordered records of one region. Executor-side. */
+  /** Key-ordered records of one region. Executor-side. An iterator that
+    * holds a resource (an open file, a socket) should also be a
+    * `java.io.Closeable`: the partition reader closes it as soon as it
+    * leaves the region, drained or not. */
   def scanRegion(regionId: String): Iterator[(Array[Byte], Array[Byte])]
   /** One region's checksum triple computed AT THE SOURCE — the
     * reference's server-side checksum RPC (`checksum/checksum.go:83`:

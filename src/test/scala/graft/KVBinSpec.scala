@@ -23,29 +23,21 @@ class KVBinSpec extends SparkTestBase {
   }
 
   test("range filter prunes region files at planning time") {
-    def partitions(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case b: BatchScanExec => b.inputPartitions.size
-      }.sum
-    val full = partitions(binSrc)
-    val narrow = partitions(KVSnapshot.rangeFilter(binSrc,
+    val full = regionsOpened(binSrc)
+    val narrow = regionsOpened(KVSnapshot.rangeFilter(binSrc,
       "li_0000000100".getBytes("UTF-8"), "li_0000000140".getBytes("UTF-8")))
     assert(full > 1, s"expected multiple region files, got $full")
     assert(narrow < full, s"narrow range should prune: narrow=$narrow full=$full")
   }
 
   test("stats skipping: conjunctive stat predicate prunes regions at planning; rows exact") {
-    def partitions(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case b: BatchScanExec => b.inputPartitions.size
-      }.sum
     val path = graft.operators.Layout.kvbinSkipTable(spark, sfSmoke)
     val tbl = KVBin.read(spark, path)
     // virtual stat columns from the #stats header
     assert(tbl.columns.toSeq === Seq("key", "value", "price_k", "cust"))
-    val full = partitions(tbl)
+    val full = regionsOpened(tbl)
     val pred = col("price_k").between(100L, 160L) && col("cust") < 200L
-    val skipped = partitions(tbl.filter(pred))
+    val skipped = regionsOpened(tbl.filter(pred))
     assert(full > 4, s"fixture must split into many regions, got $full")
     assert(skipped < full,
       s"two-column predicate must skip regions: opened=$skipped of $full")
@@ -64,7 +56,7 @@ class KVBinSpec extends SparkTestBase {
     assert(got.nonEmpty)
     // a single-column predicate on the SECOND stat also skips — the
     // Z-order layout keeps both dimensions clustered
-    assert(partitions(tbl.filter(col("cust") < 50L)) < full)
+    assert(regionsOpened(tbl.filter(col("cust") < 50L)) < full)
   }
 
   test("compacting a stats dir is lossless: specs preserved, ranges restamped, rows identical") {
@@ -176,7 +168,7 @@ class KVBinSpec extends SparkTestBase {
     val client = new FileRegionClient(dir, sconf)
     def readWith(cols: Array[String]): Seq[Seq[String]] = {
       val r = new KVBinPartitionReader(
-        KVBinInputPartition(client, file, null, null, null, cols))
+        KVBinInputPartition(client, Seq(file), null, null, null, cols))
       val rows = Iterator.continually(r)
         .takeWhile(_.next())
         .map(x => cols.indices.map(i =>
@@ -205,7 +197,7 @@ class KVBinSpec extends SparkTestBase {
       }
     }
     // bounded scan [a, c): sorted-input early stop must apply
-    val r = new KVBinPartitionReader(KVBinInputPartition(mem, "r0",
+    val r = new KVBinPartitionReader(KVBinInputPartition(mem, Seq("r0"),
       "a".getBytes("UTF-8"), "c".getBytes("UTF-8"), null, Array("key", "value")))
     val rows = Iterator.continually(r).takeWhile(_.next())
       .map(x => (new String(x.get().getBinary(0), "UTF-8"),
@@ -239,14 +231,10 @@ class KVBinSpec extends SparkTestBase {
       assert(viaWire.size === 500)
       // region pruning still happens at planning time — region metadata
       // came over the REGIONS request, and only intersecting regions dial
-      def partitions(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case b: BatchScanExec => b.inputPartitions.size
-        }.sum
       val narrow = socketRead
         .filter(col("key") >= lit("k_0000".getBytes("UTF-8")) &&
           col("key") < lit("k_0050".getBytes("UTF-8")))
-      assert(partitions(narrow) === 1,
+      assert(regionsOpened(narrow) === 1,
         "socket planning must prune to the one intersecting region")
       assert(narrow.count() === 50)
       // the version gate runs against socket-served cluster meta
@@ -457,11 +445,11 @@ class KVBinSpec extends SparkTestBase {
     // AQE's dynamic-pruning subquery does after the broadcast side
     // materializes)
     val scan = new KVBinScanBuilder(dir).build().asInstanceOf[KVBinScan]
-    assert(scan.planInputPartitions().length === nRegions)
+    assert(regionsOpened(scan.planInputPartitions()) === nRegions)
     assert(scan.filterAttributes().map(_.describe()).toSeq === Seq("key"))
     scan.filter(Array[org.apache.spark.sql.sources.Filter](In("key",
       Array[Any]("rt_0001".getBytes("UTF-8"), "rt_0003".getBytes("UTF-8")))))
-    val kept = scan.planInputPartitions().length
+    val kept = regionsOpened(scan.planInputPartitions())
     assert(kept === 1, s"two adjacent keys live in one region, kept=$kept")
     // an aggregate-pushdown scan reports nothing filterable (its rows
     // are region metadata, not keys)
@@ -482,7 +470,7 @@ class KVBinSpec extends SparkTestBase {
       override def scanRegion(id: String): Iterator[(Array[Byte], Array[Byte])] =
         ('a' to 'z').iterator.map { c => served += 1; (b(c.toString), b("v")) }
     }
-    val r = new KVBinPartitionReader(KVBinInputPartition(mem, "r0",
+    val r = new KVBinPartitionReader(KVBinInputPartition(mem, Seq("r0"),
       null, null, null, Array("key"), limit = 2))
     val got = Iterator.continually(r).takeWhile(_.next())
       .map(x => new String(x.get().getBinary(0), "UTF-8")).toList
@@ -658,7 +646,287 @@ class KVBinSpec extends SparkTestBase {
     assert(back === data.map(t => (t._1.toSeq, t._2.toSeq)).toSet)
   }
 
+  /** Runs `body` with the session confs set, then restores them. */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** A `regions`-region table of `n` keys `<prefix>_NNNN`; `planted`
+    * keys get another value. */
+  private def packTable(prefix: String, n: Int, regions: Int,
+                        planted: Set[Int] = Set.empty): String = {
+    val data = Seq.tabulate(n)(i => (f"${prefix}_$i%04d".getBytes("UTF-8"),
+      (if (planted(i)) s"other_$i" else s"val_$i").getBytes("UTF-8")))
+      .toDF("key", "value")
+    val dir = java.nio.file.Files.createTempDirectory(s"kvbin-$prefix-").toString
+    KVBin.write(data, dir, regions)
+    dir
+  }
+
+  private def kvbinPartitions(dir: String)
+      : Seq[graft.sources.kvbin.KVBinInputPartition] =
+    new graft.sources.kvbin.KVBinScanBuilder(dir).build()
+      .toBatch.planInputPartitions().toSeq
+      .map(_.asInstanceOf[graft.sources.kvbin.KVBinInputPartition])
+
+  test("region readers close every region they open: range-scoped, limited, full and abandoned reads") {
+    import graft.sources.kvbin.{FileRegionClient, KVBinInputPartition, KVBinPartitionReader, RegionClient, RegionInfo}
+    var opens = 0
+    var closes = 0
+    def b(s: String) = s.getBytes("UTF-8")
+    // two regions, a..m and n..z; iterators count their closes and
+    // never close themselves, so every close is the reader's
+    val mem: RegionClient = new RegionClient {
+      override def clusterMeta(): Map[String, String] = Map("api_version" -> "V1")
+      override def listRegions(): Seq[RegionInfo] = Seq(
+        RegionInfo("r0", b("a"), b("m"), 13L), RegionInfo("r1", b("n"), b("z"), 13L))
+      override def scanRegion(id: String): Iterator[(Array[Byte], Array[Byte])] = {
+        opens += 1
+        val from = if (id == "r0") 'a' else 'n'
+        new Iterator[(Array[Byte], Array[Byte])] with java.io.Closeable {
+          private val keys = (from to (from + 12).toChar).iterator
+          override def hasNext: Boolean = keys.hasNext
+          override def next(): (Array[Byte], Array[Byte]) =
+            (b(keys.next().toString), b("v"))
+          override def close(): Unit = closes += 1
+        }
+      }
+    }
+    def read(p: KVBinInputPartition, take: Int = Int.MaxValue): List[String] = {
+      opens = 0; closes = 0
+      val r = new KVBinPartitionReader(p)
+      val got = Iterator.continually(r).takeWhile(_.next()).take(take)
+        .map(x => new String(x.get().getBinary(0), "UTF-8")).toList
+      r.close()
+      got
+    }
+    val both = Seq("r0", "r1")
+    // range-scoped: the read stops inside r1 at the range end
+    assert(read(KVBinInputPartition(mem, both, b("c"), b("p"), null,
+      Array("key"))) === ('c' to 'o').map(_.toString).toList)
+    assert((opens, closes) === (2, 2), "range-scoped read")
+    // limited: the partial limit applies per region
+    assert(read(KVBinInputPartition(mem, both, null, null, null,
+      Array("key"), limit = 2)) === List("a", "b", "n", "o"))
+    assert((opens, closes) === (2, 2), "limited read")
+    // full
+    assert(read(KVBinInputPartition(mem, both, null, null, null,
+      Array("key"))).size === 26)
+    assert((opens, closes) === (2, 2), "full read")
+    // abandoned mid-region (a downstream limit stops pulling): close()
+    // closes the open region, and r1 is never opened
+    assert(read(KVBinInputPartition(mem, both, null, null, null,
+      Array("key")), take = 3) === List("a", "b", "c"))
+    assert((opens, closes) === (1, 1), "abandoned read")
+    // the file-backed client's region iterator is closeable too
+    val dir = packTable("lk", 40, 2)
+    val client = new FileRegionClient(dir, new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf()))
+    val it = client.scanRegion(client.listRegions().head.id)
+    assert(it.isInstanceOf[java.io.Closeable])
+    it.next()
+    it.asInstanceOf[java.io.Closeable].close()
+    it.asInstanceOf[java.io.Closeable].close() // idempotent
+  }
+
+  test("region packing: partitions cover every pruned region once, in key order, within the split cap") {
+    import graft.sources.kvbin.KVBinInputPartition
+    val dir = packTable("pk", 1600, 16)
+    val conf = spark.sessionState.newHadoopConf()
+    val byKey = KVBin.readIndex(dir, conf).sortBy(_._2)(KVBin.keyOrder).map(_._1)
+    assert(byKey.size === 16)
+    // the test session has several cores, so by default the table
+    // spreads over several partitions, each a contiguous key run
+    val parts = kvbinPartitions(dir)
+    assert(parts.size > 1 && parts.size < 16, s"partitions=${parts.size}")
+    assert(parts.flatMap(_.regionIds) === byKey)
+    // a pruned scan: the survivors, once each, in key order
+    val narrow = KVBin.read(spark, dir)
+      .filter(col("key") >= lit("pk_0250".getBytes("UTF-8")) &&
+        col("key") < lit("pk_0900".getBytes("UTF-8")))
+    val kept = scanPartitions(narrow)
+      .flatMap(_.asInstanceOf[KVBinInputPartition].regionIds)
+    assert(kept.nonEmpty && kept.size < 16 && kept === byKey.filter(kept.toSet))
+    assert(byKey.slice(byKey.indexOf(kept.head), byKey.indexOf(kept.last) + 1) === kept)
+    assert(narrow.count() === 650L)
+    // the cap: Spark's file split rule over (bytes + open cost) per
+    // region; a bin exceeds it only when it holds a single region, and
+    // a bin closes only when the next region would not fit (next fit)
+    val openCost = 2000L
+    withConfs("spark.sql.files.openCostInBytes" -> openCost.toString,
+        "spark.sql.files.maxPartitionBytes" -> "9000") {
+      val sizes = new graft.sources.kvbin.FileRegionClient(dir,
+        new org.apache.spark.util.SerializableConfiguration(conf))
+        .listRegions().map(r => r.id -> (r.bytes + openCost)).toMap
+      val total = sizes.values.sum
+      val cap = math.min(9000L, math.max(openCost,
+        total / spark.sparkContext.defaultParallelism))
+      val bins = kvbinPartitions(dir).map(_.regionIds)
+      assert(bins.flatten === byKey)
+      assert(bins.size > 1, s"bins=$bins")
+      bins.foreach(bin => assert(bin.size === 1 || bin.map(sizes).sum <= cap,
+        s"bin $bin weighs ${bin.map(sizes).sum} > cap $cap"))
+      bins.sliding(2).foreach { case Seq(a, next) =>
+        assert(a.map(sizes).sum + sizes(next.head) > cap,
+          s"bin $a closed early: next region ${next.head} fits under $cap")
+      }
+    }
+    // minPartitionNum=1 lifts the per-core split: the small table is one task
+    withConfs("spark.sql.files.minPartitionNum" -> "1") {
+      val one = kvbinPartitions(dir)
+      assert(one.size === 1 && one.head.regionIds === byKey)
+      assert(KVBin.read(spark, dir).rdd.getNumPartitions === 1)
+    }
+  }
+
+  test("region packing: a packed partition carries its client (and hadoop conf) once") {
+    val dir = packTable("ps", 1600, 16)
+    def serializedSize(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(o); out.close()
+      bytes.size()
+    }
+    val packed = withConfs("spark.sql.files.minPartitionNum" -> "1")(kvbinPartitions(dir))
+    val single = withConfs("spark.sql.files.maxPartitionBytes" -> "1")(kvbinPartitions(dir))
+    assert(packed.size === 1 && packed.head.regionIds.size === 16)
+    assert(single.size === 16 && single.forall(_.regionIds.size === 1))
+    val (p16, p1) = (serializedSize(packed.head), serializedSize(single.head))
+    assert(p16 < 2 * p1, s"16-region partition $p16 B vs 1-region $p1 B")
+  }
+
+  test("region packing: one region per partition and packed partitions give equal answers") {
+    import graft.operators.Diff
+    val planted = Set(3, 4, 5, 700, 1201)
+    val srcDir = packTable("eq", 1600, 16)
+    val dstDir = packTable("eq", 1600, 16, planted)
+    val dimPath = java.nio.file.Files.createTempDirectory("kvbin-eqdim-").toString
+    Seq(("eq_0007", 1), ("eq_0008", 1), ("eq_1500", 1), ("eq_0900", 2))
+      .toDF("ks", "grp").write.mode("overwrite").parquet(dimPath)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map {
+        case b: Array[Byte] => new String(b, "UTF-8")
+        case other => String.valueOf(other)
+      }.mkString("|")).toSeq.sorted
+    def answers(): (Seq[Seq[String]], Int, Boolean) = {
+      val (src, dst) = (KVBin.read(spark, srcDir), KVBin.read(spark, dstDir))
+      // a selective build side, so the planner injects a runtime filter
+      val dim = spark.read.parquet(dimPath).filter(col("grp") === 1)
+        .select(col("ks").cast("binary").as("k"))
+      val joined = src.join(dim, col("key") === col("k"))
+      val pushedAgg = src.agg(count(lit(1)), min(col("key")), max(col("key")))
+      val got = Seq(
+        Seq(src.count().toString),
+        rows(Checksum.verdict(src, dst)),
+        rows(Diff.diff(src, dst)),
+        rows(Diff.checksumPrunedDiff(src, dst)),
+        rows(src.filter(col("key") >= lit("eq_0123".getBytes("UTF-8")) &&
+          col("key") <= lit("eq_0777".getBytes("UTF-8")))),
+        rows(src.limit(5)),
+        rows(joined),
+        rows(pushedAgg))
+      val dynamic = joined.queryExecution.executedPlan.toString.contains("dynamicpruning")
+      assert(pushedAgg.queryExecution.executedPlan.toString.contains("PushedAggregates"))
+      (got, src.rdd.getNumPartitions, dynamic)
+    }
+    withConfs(
+        "spark.sql.autoBroadcastJoinThreshold" -> "4096",
+        "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly" -> "false",
+        "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false") {
+      val (perRegion, nPerRegion, dyn1) =
+        withConfs("spark.sql.files.maxPartitionBytes" -> "1")(answers())
+      val (packed, nPacked, dyn2) = answers()
+      assert(nPerRegion === 16 && nPacked < 16, s"$nPerRegion vs $nPacked")
+      assert(dyn1 && dyn2, "the join must carry a runtime filter")
+      assert(perRegion === packed)
+      assert(packed(0) === Seq("1600"))
+      assert(packed(2).size === planted.size && packed(3) === packed(2))
+      assert(packed(5).size === 5 && packed(6).size === 3)
+      assert(packed(7) === Seq("1600|eq_0000|eq_1599"))
+    }
+  }
+
+  test("KVBinScan value equality: built alike ⇒ equal and hash alike; any identity field differs ⇒ unequal") {
+    import graft.sources.kvbin.{KVBinAgg, KVBinScan, KVBinScanBuilder, KVBinSource, StatBound}
+    import org.apache.spark.sql.types.StructType
+    val dir = packTable("id", 200, 4)
+    val a = new KVBinScanBuilder(dir).build()
+    val b = new KVBinScanBuilder(dir).build()
+    assert(a === b && a.hashCode === b.hashCode)
+    def k(s: String) = s.getBytes("UTF-8")
+    def mk(dir: String = dir, start: Array[Byte] = k("a"), end: Array[Byte] = k("m"),
+           endIncl: Array[Byte] = null, required: StructType = KVBinSource.schema,
+           api: Option[String] = None, endpoints: Option[String] = None,
+           agg: Option[Seq[KVBinAgg]] = None, limit: Option[Int] = None,
+           statDefs: Seq[(String, String)] = Nil,
+           statBounds: Seq[StatBound] = Nil): KVBinScan =
+      new KVBinScan(dir, start, end, endIncl, required, api, endpoints, agg,
+        limit, statDefs, statBounds)
+    val base = mk()
+    // equal byte CONTENTS in fresh arrays are the same scope
+    assert(base === mk() && base.hashCode === mk().hashCode)
+    val variants = Seq(
+      "dir" -> mk(dir = dir + "-other"),
+      "start" -> mk(start = k("b")),
+      "start=null" -> mk(start = null),
+      "end" -> mk(end = k("n")),
+      "endIncl" -> mk(endIncl = k("z")),
+      "required" -> mk(required = StructType(KVBinSource.schema.fields.take(1))),
+      "expectedApiVersion" -> mk(api = Some("V2")),
+      "endpoints" -> mk(endpoints = Some("localhost:1")),
+      "agg" -> mk(agg = Some(Seq(KVBinAgg.CountAll))),
+      "limit" -> mk(limit = Some(3)),
+      "statDefs" -> mk(statDefs = Seq("vl" -> "vlen")),
+      "statBounds" -> mk(statBounds = Seq(StatBound(0, "vl", "vlen", 0L, 5L))))
+    variants.foreach { case (field, v) =>
+      assert(v !== base, s"scans differing only in $field compare equal")
+    }
+    // the runtime key set is not identity: it arrives after planning, and
+    // the hash must not move under the planner's feet
+    val h = a.hashCode
+    a.asInstanceOf[KVBinScan].filter(Array[org.apache.spark.sql.sources.Filter](
+      org.apache.spark.sql.sources.In("key", Array[Any](k("id_0001")))))
+    assert(a.hashCode === h && a === b)
+  }
+
+  test("KVBinScan value equality: a fresh read after an in-place rewrite answers the new data") {
+    import graft.operators.Diff
+    val a = packTable("rw", 400, 4)
+    val b = packTable("rw", 400, 4)
+    def verdict() = Checksum.verdict(KVBin.read(spark, a), KVBin.read(spark, b))
+      .select("matches").as[Boolean].head()
+    def diffKeys() = Diff.checksumPrunedDiff(KVBin.read(spark, a), KVBin.read(spark, b))
+      .select(col("key").cast("string")).as[String].collect().sorted.toSeq
+    assert(verdict())
+    assert(diffKeys().isEmpty)
+    val rewritten = Seq.tabulate(400)(i => (f"rw_$i%04d".getBytes("UTF-8"),
+      (if (i == 17) "changed" else s"val_$i").getBytes("UTF-8"))).toDF("key", "value")
+    KVBin.write(rewritten, a, 4)
+    assert(!verdict(), "verdict answered the replaced table")
+    assert(diffKeys() === Seq("rw_0017"))
+  }
+
   private def kvbinFmt = classOf[graft.sources.kvbin.KVBinSource].getName
+
+  /** Regions a scan opens: the region ids summed across its kvbin input
+    * partitions (a packed partition holds a key run of several). */
+  private def regionsOpened(
+      parts: collection.Seq[org.apache.spark.sql.connector.read.InputPartition]): Int =
+    parts.collect {
+      case p: graft.sources.kvbin.KVBinInputPartition => p.regionIds.size
+    }.sum
+  private def regionsOpened(df: org.apache.spark.sql.DataFrame): Int =
+    regionsOpened(scanPartitions(df))
+  private def scanPartitions(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.connector.read.InputPartition] =
+    df.queryExecution.executedPlan.collectLeaves().toSeq
+      .collect { case b: BatchScanExec => b.inputPartitions }.flatten
 
   test("KVBin.write over a live table: fresh region names, old generation swept") {
     val data = Seq.tabulate(400)(i => (f"rw_$i%04d".getBytes("UTF-8"),

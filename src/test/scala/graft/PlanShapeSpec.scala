@@ -61,6 +61,26 @@ class PlanShapeSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("checksumPrunedDiff over two kvbin reads computes the bucket digest once (ReusedExchange)") {
+    import graft.sources.kvbin.KVBin
+    import spark.implicits._
+    // prune(src) and prune(dst) both embed the changed-bucket digest;
+    // value-equal kvbin scans let the planner share its exchange
+    def table(changed: Int): String = {
+      val dir = java.nio.file.Files.createTempDirectory("kvbin-reuse-").toString
+      KVBin.write(Seq.tabulate(300)(i => (f"ru_$i%04d".getBytes("UTF-8"),
+        (if (i == changed) "x" else s"v$i").getBytes("UTF-8"))).toDF("key", "value"),
+        dir, 4)
+      dir
+    }
+    val out = graft.operators.Diff.checksumPrunedDiff(
+      KVBin.read(spark, table(-1)), KVBin.read(spark, table(42)))
+    // the final adaptive plan: stages are reused as they are created
+    assert(out.collect().length === 1)
+    val p = out.queryExecution.executedPlan.toString
+    assert(p.contains("ReusedExchange"), p)
+  }
+
   test("q_decontaminate: eval side broadcast — the training corpus is never shuffled to join") {
     val p = plan("q_decontaminate")
     assert(p.contains("BroadcastHashJoin"), p)
