@@ -62,8 +62,7 @@ object SketchStore {
     val fromIndex = scala.util.Try(
         graft.sources.kvbin.KVBin.readIndex(table, conf)).toOption
       .getOrElse(Nil)
-      .map { case (_, mn, _, _) =>
-        new String(mn, "UTF-8").takeWhile(_ != '/') }.toSet
+      .map(r => new String(r.minKey, "UTF-8").takeWhile(_ != '/')).toSet
     val fromRegistry =
       if (!fromIndex.contains(WavesRegistry)) Set.empty[String]
       else s.read.format(fmt).option("path", table).load()

@@ -11,27 +11,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * connector — the engine-side analog of a TiKV cluster's
   * region-partitioned key space (reference `checksum/checksum.go:52-65`
   * builds per-region sub-ranges from PD metadata; here the `_index`
-  * sidecar IS the region metadata: one line per file with its key
-  * range).
+  * sidecar IS the region metadata: one line per file, one
+  * [[RegionInfo]] each).
   *
   * Layout: `dir/part-*.kv` (names: [[KVBinDataWriter.RegionFile]]) —
   * length-prefixed records `[klen:int32][key][vlen:int32][value]`,
   * sorted by key, each file a contiguous key range unless placed by
   * `__cluster` (see [[write]]); `dir/_index` — `fileName<TAB>minKeyHex<TAB>
   * maxKeyHex<TAB>count[<TAB>statMin<TAB>statMax ...]` per file, headed
-  * by `#key=value` metadata lines. Reserved headers: `#api_version`
-  * (cluster version gate), `#stats` (declared record statistics),
-  * `#generation` (monotonic commit counter), `#table_id` (identity a
-  * plain overwrite re-mints), `#gen.<g>` (files born in generation g),
-  * `#compacted_through` (the fold point a preserving rewrite stamps) —
+  * by `#key=value` metadata lines. One codec reads and writes it:
+  * [[readIndexFile]] parses a whole index into (meta, [[RegionInfo]]s)
+  * and [[regionLine]] prints one region line; a region's `bytes` is not
+  * on its line (readers size regions by file length). Reserved headers:
+  * `#api_version` (cluster version gate), `#stats` (declared record
+  * statistics), `#generation` (monotonic commit counter), `#table_id`
+  * (identity a plain overwrite re-mints), `#gen.<g>` (files born in
+  * generation g), `#compacted_through` (the fold point a preserving
+  * rewrite stamps) —
   * together the O(1) streaming-offset and compaction-adoption
   * bookkeeping. Unknown `#key=value` lines pass through every parser,
   * and writers may stamp their own via the `meta.<key>` write option.
   *
   * Writes happen on EXECUTORS through the Hadoop FS API (file:// in
   * local mode, HDFS/object stores on a cluster); the driver only
-  * collects the per-file (min,max,count) triples — bytes never flow
-  * through the driver.
+  * collects one [[RegionInfo]] per file — bytes never flow through the
+  * driver.
   */
 object KVBin {
 
@@ -44,7 +48,8 @@ object KVBin {
     * index, replacing whatever table `dir` held, stamped with the
     * cluster API version (`#api_version=` header line in the index — the
     * source-side half of the reference's version gate,
-    * `utils/utils.go:13-26`). Returns the index entries. This is the
+    * `utils/utils.go:13-26`). Returns the index entries (unsized:
+    * `bytes = -1`). This is the
     * DSv2 write ([[KVBinWriteBuilder]]) in overwrite mode, so it carries
     * that write's commit protocol: attempt-unique region names, the
     * atomic `_index` swap, and the sweep of the replaced regions.
@@ -69,8 +74,7 @@ object KVBin {
     * space) while stat pruning becomes sharp. */
   def write(kv: DataFrame, dir: String, numRanges: Int,
             apiVersion: String = "V1",
-            stats: Seq[(String, String)] = Nil)
-      : Seq[(String, Array[Byte], Array[Byte], Long)] = {
+            stats: Seq[(String, String)] = Nil): Seq[RegionInfo] = {
     val cols = Seq("key", "value") ++ kv.columns.find(_ == ClusterColumn)
     kv.select(cols.map(col): _*).write
       .format(classOf[KVBinSource].getName)
@@ -99,7 +103,7 @@ object KVBin {
     * forced STRICTLY ABOVE the previous generation's — two swaps inside
     * the filesystem's mtime granularity with equal byte length would
     * otherwise leave a (length, mtime)-fingerprinted cache (the
-    * [[KVBinServer]] index cache) stale until the next commit. */
+    * [[KVBinServer]]'s served client) stale until the next commit. */
   def writeIndexAtomic(dir: String, conf: Configuration, content: String): Unit = {
     val uri = new java.net.URI(dir)
     val tmpName = s"$IndexFile.tmp-${java.util.UUID.randomUUID().toString}"
@@ -174,49 +178,46 @@ object KVBin {
   def unhex(s: String): Array[Byte] =
     s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
 
-  /** One read of the index file → (metadata, region entries). Metadata
-    * comes from `#key=value` header lines; indexes written before the
-    * stamp existed report api_version V1. */
-  def readAll(dir: String, conf: Configuration)
-      : (Map[String, String], Seq[(String, Array[Byte], Array[Byte], Long)]) = {
-    val (m, e, _) = readAllWithRanges(dir, conf)
-    (m, e)
-  }
-
-  /** ONE read of the index file → (metadata, region entries, per-region
-    * stat ranges) — the consistent-snapshot read for consumers that
-    * need all three (the [[KVBinServer]] cache, [[FileRegionClient]]):
-    * a separate [[statRanges]] call would re-open the file, doubling
-    * the I/O and — across an index swap landing between the two reads —
-    * pairing one generation's region rows with another's stat ranges. */
-  def readAllWithRanges(dir: String, conf: Configuration)
-      : (Map[String, String], Seq[(String, Array[Byte], Array[Byte], Long)],
-         Map[String, Seq[(Long, Long)]]) = {
+  /** One read of the index file → (metadata, region entries) — the one
+    * `_index` parse. Metadata comes from `#key=value` header lines;
+    * indexes written before the stamp existed report api_version V1.
+    * Each region line's stat [min, max] pairs attach to its entry only
+    * when the header declares `#stats`; a line without them (e.g.
+    * rewritten by a stats-unaware compaction that preserved the header)
+    * gets Nil — "unknown, cannot prune". Meta and entries come from the
+    * same read, so they always describe one index generation. */
+  def readIndexFile(dir: String, conf: Configuration)
+      : (Map[String, String], Seq[RegionInfo]) = {
     val fs = FileSystem.get(new java.net.URI(dir), conf)
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
       fs.open(new Path(dir, IndexFile)), "UTF-8"))
-    try {
-      val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
-        .filter(_.nonEmpty).toList
-      val meta0 = lines.filter(_.startsWith("#"))
-        .map(_.stripPrefix("#").split("=", 2))
-        .collect { case Array(k, v) => k -> v }.toMap
-      val meta = if (meta0.contains("api_version")) meta0
-                 else meta0 + ("api_version" -> "V1")
-      val body = lines.filterNot(_.startsWith("#")).map(_.split("\t"))
-      val entries = body.map { a =>
-        // ≥4 fields; stats-bearing indexes append min/max pairs (parsed
-        // into the ranges map below) — plain consumers ignore them
-        (a(0), unhex(a(1)), unhex(a(2)), a(3).toLong)
-      }
-      val ranges = body.map { a =>
-        a(0) -> a.drop(4).grouped(2).collect {
-          case Array(lo, hi) => (lo.toLong, hi.toLong)
-        }.toSeq
-      }.toMap
-      (meta, entries, ranges)
-    } finally in.close()
+    try parseIndex(Iterator.continually(in.readLine()).takeWhile(_ != null).toList)
+    finally in.close()
   }
+
+  /** [[readIndexFile]] over index text lines. */
+  def parseIndex(lines: Seq[String]): (Map[String, String], Seq[RegionInfo]) = {
+    val (header, body) = lines.filter(_.nonEmpty).partition(_.startsWith("#"))
+    val meta0 = header.map(_.stripPrefix("#").split("=", 2))
+      .collect { case Array(k, v) => k -> v }.toMap
+    val meta = if (meta0.contains("api_version")) meta0
+               else meta0 + ("api_version" -> "V1")
+    val withStats = meta.contains("stats")
+    val regions = body.map { line =>
+      val a = line.split("\t")
+      RegionInfo(a(0), unhex(a(1)), unhex(a(2)), a(3).toLong,
+        stats = if (!withStats) Nil else a.drop(4).grouped(2).collect {
+          case Array(lo, hi) => (lo.toLong, hi.toLong)
+        }.toSeq)
+    }
+    (meta, regions)
+  }
+
+  /** One `_index` region line — the write half of the codec. */
+  def regionLine(r: RegionInfo): String =
+    (Seq(r.id, hexOf(r.minKey), hexOf(r.maxKey), r.nKeys.toString) ++
+      r.stats.flatMap { case (lo, hi) => Seq(lo.toString, hi.toString) })
+      .mkString("\t")
 
   /** Meta map → `#k=v` header lines, SCALAR keys first and the
     * O(regions) `#gen.<g>` file lists last — the order [[readPollMeta]]
@@ -283,33 +284,13 @@ object KVBin {
       val Array(n, sp) = s.split(":", 2); (n, sp)
     })
 
-  /** Per-region stat [min, max] ranges, file → pairs in header order.
-    * Regions whose line lacks the pairs (e.g. rewritten by a
-    * stats-unaware compaction that preserved the header) map to Nil —
-    * consumers must treat that as "unknown, cannot prune"; the virtual
-    * columns themselves still evaluate from the spec. */
-  def statRanges(dir: String, conf: Configuration): Map[String, Seq[(Long, Long)]] = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      fs.open(new Path(dir, IndexFile)), "UTF-8"))
-    try {
-      Iterator.continually(in.readLine()).takeWhile(_ != null)
-        .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
-          val a = line.split("\t")
-          a(0) -> a.drop(4).grouped(2).collect {
-            case Array(lo, hi) => (lo.toLong, hi.toLong)
-          }.toSeq
-        }.toMap
-    } finally in.close()
-  }
-
-  /** Region index entries: (file, minKey, maxKey, count). */
-  def readIndex(dir: String, conf: Configuration): Seq[(String, Array[Byte], Array[Byte], Long)] =
-    readAll(dir, conf)._2
+  /** Region index entries, stat ranges attached (see [[readIndexFile]]). */
+  def readIndex(dir: String, conf: Configuration): Seq[RegionInfo] =
+    readIndexFile(dir, conf)._2
 
   /** Source metadata from the index header. */
   def readMeta(dir: String, conf: Configuration): Map[String, String] =
-    readAll(dir, conf)._1
+    readIndexFile(dir, conf)._1
 
   /** Iterate one region file's records. The stream closes at EOF; a
     * reader that stops early (range end, pushed limit) closes it through

@@ -36,9 +36,11 @@ import graft.functions.RawChecksum
   *   POLL     -> same framing as META, SCALAR keys only (no `gen.*`
   *               file lists) — the streaming tail's per-trigger poll
   *               stays O(1) bytes on the wire at any region count
-  *   REGIONS  -> int32 n, then n × ([idlen][id][mlen][minKey]
-  *               [xlen][maxKey][nKeys:int64][bytes:int64]
-  *               [nstats:int32, then nstats × (lo:int64, hi:int64)])
+  *   REGIONS  -> int32 n, then n × region, where
+  *               region := [idlen][id][mlen][minKey][xlen][maxKey]
+  *               [nKeys:int64][bytes:int64]
+  *               [nstats:int32, then nstats × (lo:int64, hi:int64)]
+  *               is one [[RegionInfo]] ([[KVBinNet.writeRegion]])
   *               — the stamped per-region stat min/max ride the reply
   *               (PD ships approximate stats the same way), so a
   *               wire-planned scan and a socket/fleet TAIL stat-prune
@@ -64,8 +66,8 @@ import graft.functions.RawChecksum
   *               [plannedGeneration ("" = none)], [plannedTableId],
   *               [assignedTableId ("" = none; fresh tables only —
   *                 a fleet driver stamps one identity across stores)],
-  *               int32 nFresh × ([file][minKey][maxKey][count:int64]
-  *                 [nStat:int32 × (lo:int64, hi:int64)])
+  *               int32 nFresh × region (the REGIONS frame; a manifest
+  *                 entry's bytes is -1)
   *            -> byte 1, or byte 0 + [error message] — the server runs
   *               the IDENTICAL KVBinCommit logic as the filesystem
   *               path (one definition of commit), guarded by the
@@ -97,9 +99,53 @@ object KVBinNet {
     val n = in.readInt()
     val b = new Array[Byte](n); in.readFully(b); b
   }
+  private[kvbin] def writeString(out: DataOutputStream, s: String): Unit =
+    writeBytes(out, s.getBytes("UTF-8"))
+  private[kvbin] def readString(in: DataInputStream): String =
+    new String(readBytes(in), "UTF-8")
+
+  /** int32 n, then n × ([key][value]) — META/POLL maps (sorted by key)
+    * and COMMIT's stats and meta lists. */
+  private[kvbin] def writePairs(out: DataOutputStream, kvs: Seq[(String, String)]): Unit = {
+    out.writeInt(kvs.size)
+    kvs.foreach { case (k, v) => writeString(out, k); writeString(out, v) }
+  }
+  private[kvbin] def readPairs(in: DataInputStream): Seq[(String, String)] =
+    Seq.fill(in.readInt()) { val k = readString(in); (k, readString(in)) }
+
+  /** byte scoped(0|1); if 1: [minKey][maxKey] — a store's owned range. */
+  private[kvbin] def writeOwns(out: DataOutputStream,
+                               owns: Option[(Array[Byte], Array[Byte])]): Unit =
+    owns match {
+      case Some((lo, hi)) => out.writeByte(1); writeBytes(out, lo); writeBytes(out, hi)
+      case None => out.writeByte(0)
+    }
+  private[kvbin] def readOwns(in: DataInputStream): Option[(Array[Byte], Array[Byte])] =
+    if (in.readByte() == 1) Some((readBytes(in), readBytes(in))) else None
+
+  /** The one wire frame of a region (REGIONS replies, COMMIT manifests). */
+  def writeRegion(out: DataOutputStream, r: RegionInfo): Unit = {
+    writeString(out, r.id)
+    writeBytes(out, r.minKey)
+    writeBytes(out, r.maxKey)
+    out.writeLong(r.nKeys)
+    out.writeLong(r.bytes)
+    out.writeInt(r.stats.size)
+    r.stats.foreach { case (lo, hi) => out.writeLong(lo); out.writeLong(hi) }
+  }
+  def readRegion(in: DataInputStream): RegionInfo = {
+    val id = readString(in)
+    val mn = readBytes(in); val mx = readBytes(in)
+    val n = in.readLong(); val bytes = in.readLong()
+    RegionInfo(id, mn, mx, n, bytes,
+      Seq.fill(in.readInt())((in.readLong(), in.readLong())))
+  }
 }
 
-/** Serves one kvbin directory over TCP on an ephemeral loopback port.
+/** Serves one kvbin directory over TCP on an ephemeral loopback port,
+  * through one [[FileRegionClient]] over that directory: META, POLL,
+  * REGIONS, SCAN, CHECKSUM and the PUT guard all answer from it, and it
+  * is replaced when the `_index` changes.
   * Thread-per-connection (the verification workload opens a handful of
   * concurrent region scans — one per executor task — not thousands);
   * `close()` is idempotent and joins the acceptor.
@@ -141,62 +187,40 @@ class KVBinServer(dir: String, conf: Configuration,
 
   private val server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
   private val closed = new AtomicBoolean(false)
-  // the index cache is FINGERPRINT-guarded (length + mtime of _index):
-  // a store node serves the CURRENT region set — what lets a streaming
-  // tail poll REGIONS over the wire and see appends land — while
-  // between commits every META/REGIONS/SCAN answers from the cache (a
-  // full N-region table scan must not cost N index reads). The atomic
-  // _index swap (writeIndexAtomic) guarantees a re-read never sees a
-  // half-written sidecar, and the SAME swap enforces strictly-increasing
-  // index mtimes on local and HDFS filesystems (where setTimes is
-  // honored), so there two equal-length commits inside the mtime
-  // granularity can never leave this fingerprint stale — a wire-tailed
-  // stream sees the newest commit. On filesystems whose setTimes is a
-  // no-op (several object-store connectors) the bump is best-effort and
-  // the window narrows to same-length swaps inside one mtime tick; a
-  // server over such a store should sit behind a fronting local/HDFS
-  // copy, or the fingerprint would need the #generation header (one
-  // header read per request — rejected: it re-opens the index on the
-  // cache's own hot path).
+  // the served client is FINGERPRINT-guarded (length + mtime of
+  // _index): a store node serves the CURRENT region set — what lets a
+  // streaming tail poll REGIONS over the wire and see appends land —
+  // while between commits every META/REGIONS/SCAN answers from the one
+  // client's index read (a full N-region table scan must not cost N
+  // index reads). The atomic _index swap (writeIndexAtomic) guarantees a
+  // re-read never sees a half-written sidecar, and the SAME swap
+  // enforces strictly-increasing index mtimes on local and HDFS
+  // filesystems (where setTimes is honored), so there two equal-length
+  // commits inside the mtime granularity can never leave this
+  // fingerprint stale — a wire-tailed stream sees the newest commit. On
+  // filesystems whose setTimes is a no-op (several object-store
+  // connectors) the bump is best-effort and the window narrows to
+  // same-length swaps inside one mtime tick; a server over such a store
+  // should sit behind a fronting local/HDFS copy, or the fingerprint
+  // would need the #generation header (one header read per request —
+  // rejected: it re-opens the index on the client's own hot path).
+  private val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
   private val idxLock = new Object
-  private var idxFp: (Long, Long) = null
-  private var idxCache: (Map[String, String],
-    Seq[(String, Array[Byte], Array[Byte], Long)], Map[String, Long],
-    Map[String, Seq[(Long, Long)]], Set[String]) = null
-  private def current(): (Map[String, String],
-      Seq[(String, Array[Byte], Array[Byte], Long)], Map[String, Long],
-      Map[String, Seq[(Long, Long)]], Set[String]) =
-    idxLock.synchronized {
-      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), conf)
-      val st = fs.getFileStatus(
-        new org.apache.hadoop.fs.Path(dir, KVBin.IndexFile))
-      val fp = (st.getLen, st.getModificationTime)
-      if (idxFp != fp) {
-        // ONE index read for meta + entries + stat ranges: a second
-        // statRanges read could straddle an index swap and pair one
-        // generation's rows with another's ranges
-        val (meta, entries, ranges) = KVBin.readAllWithRanges(dir, conf)
-        // serialized region sizes (file lengths) ride the REGIONS reply
-        // the way PD ships approximate_size — one listStatus per commit
-        val lens = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .map(s0 => s0.getPath.getName -> s0.getLen).toMap
-        idxCache = (meta, entries.filter(r => owns(r._1)), lens,
-          if (meta.contains("stats")) ranges
-          else Map.empty[String, Seq[(Long, Long)]],
-          // ALL referenced names, UNFILTERED by the read-scope `owns`:
-          // the PUT truncation guard must protect regions this server
-          // does not serve too (a shared-dir fleet sibling's region is
-          // just as live)
-          entries.map(_._1).toSet)
-        idxFp = fp
-      }
-      idxCache
+  private var served: ((Long, Long), FileRegionClient) = null
+  private def current(): FileRegionClient = idxLock.synchronized {
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), conf)
+    val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, KVBin.IndexFile))
+    val fp = (st.getLen, st.getModificationTime)
+    if (served == null || served._1 != fp) {
+      val c = new FileRegionClient(dir, sconf)
+      c.clusterMeta() // the index read, under the lock that fingerprinted it
+      served = (fp, c)
     }
-  private def index = { val c = current(); (c._1, c._2) }
-  private def ownedRegions = current()._2
-  private def regionLens: Map[String, Long] = current()._3
-  private def regionRanges: Map[String, Seq[(Long, Long)]] = current()._4
-  private def referencedNames: Set[String] = current()._5
+    served._2
+  }
+  /** The served client, when it lists region `id` and `owns` it. */
+  private def servedFor(id: String): Option[FileRegionClient] =
+    Some(current()).filter(c => owns(id) && c.listRegions().exists(_.id == id))
 
   /** Served SCAN / CHECKSUM / PUT / COMMIT request counts (spec
     * observables — a wire replication spec proves rows moved as PUT
@@ -266,7 +290,7 @@ class KVBinServer(dir: String, conf: Configuration,
   // strict: reading a table that does not exist is an error, not an
   // empty result.
   private def metaOrEmpty: Map[String, String] =
-    try index._1
+    try current().clusterMeta()
     catch { case _: java.io.FileNotFoundException =>
       Map(KVBinNet.AbsentKey -> dir) }
 
@@ -280,72 +304,54 @@ class KVBinServer(dir: String, conf: Configuration,
       val req = readRequestLine(in)
       req match {
         case "META" =>
-          val meta = metaOrEmpty
-          out.writeInt(meta.size)
-          meta.toSeq.sortBy(_._1).foreach { case (k, v) =>
-            writeBytes(out, k.getBytes("UTF-8"))
-            writeBytes(out, v.getBytes("UTF-8"))
-          }
+          writePairs(out, metaOrEmpty.toSeq.sortBy(_._1))
         case "POLL" =>
-          val meta = metaOrEmpty.filterNot(_._1.startsWith("gen."))
-          out.writeInt(meta.size)
-          meta.toSeq.sortBy(_._1).foreach { case (k, v) =>
-            writeBytes(out, k.getBytes("UTF-8"))
-            writeBytes(out, v.getBytes("UTF-8"))
-          }
+          writePairs(out, metaOrEmpty.toSeq.filterNot(_._1.startsWith("gen."))
+            .sortBy(_._1))
           // the OWNS answer rides the same reply (after the map, so a
           // caller reading only the map is untouched): the fleet
           // replication sink probes marker AND ownership every batch —
           // one dial instead of two per store per micro-batch
-          ownsRange match {
-            case Some((lo, hi)) =>
-              out.writeByte(1); writeBytes(out, lo); writeBytes(out, hi)
-            case None => out.writeByte(0)
-          }
+          writeOwns(out, ownsRange)
         case "OWNS" =>
           // the write-ownership probe: scoped stores answer their key
           // range (empty bytes = unbounded side), unscoped answer 0 —
           // the fleet write builder requires every destination store
           // to be scoped, so it can route PUT streams by key
-          ownsRange match {
-            case Some((lo, hi)) =>
-              out.writeByte(1); writeBytes(out, lo); writeBytes(out, hi)
-            case None => out.writeByte(0)
-          }
+          writeOwns(out, ownsRange)
         case "REGIONS" =>
-          val regions = ownedRegions
+          val regions = current().listRegions().filter(r => owns(r.id))
           out.writeInt(regions.size)
-          regions.foreach { case (id, mn, mx, n) =>
-            writeBytes(out, id.getBytes("UTF-8"))
-            writeBytes(out, mn)
-            writeBytes(out, mx)
-            out.writeLong(n)
-            out.writeLong(regionLens.getOrElse(id, -1L))
-            val st = regionRanges.getOrElse(id, Nil)
-            out.writeInt(st.size)
-            st.foreach { case (lo, hi) => out.writeLong(lo); out.writeLong(hi) }
-          }
+          regions.foreach(writeRegion(out, _))
         case scan if scan != null && scan.startsWith("SCAN ") =>
           scanRequests.incrementAndGet()
           val id = scan.stripPrefix("SCAN ")
           // region ids come from this server's own index; anything else
           // is a protocol error answered by the terminator alone
-          if (ownedRegions.exists(_._1 == id))
-            KVBin.readFile(dir, id, conf).foreach { case (k, v) =>
+          servedFor(id).foreach { c =>
+            // closed however the stream ends: a client that drops
+            // mid-scan fails the write below, and the region file must
+            // not stay open until GC
+            val records = c.scanRegion(id)
+            try records.foreach { case (k, v) =>
               writeBytes(out, k); writeBytes(out, v)
-            }
+            } finally records.close()
+          }
           out.writeInt(-1)
         case cs if cs != null && cs.startsWith("CHECKSUM ") =>
           checksumRequests.incrementAndGet()
           val id = cs.stripPrefix("CHECKSUM ")
-          if (ownedRegions.exists(_._1 == id)) {
-            // the server-side fold (`checksum/checksum.go:83`'s RPC body):
-            // stream the region file through the CRC64 monoid locally and
-            // answer with the triple — 24 bytes regardless of region size
-            val c = RawChecksum.fold(KVBin.readFile(dir, id, conf))
-            out.writeByte(1)
-            out.writeLong(c.crc64_xor); out.writeLong(c.total_kvs); out.writeLong(c.total_bytes)
-          } else out.writeByte(0)
+          servedFor(id) match {
+            case Some(client) =>
+              // the server-side fold (`checksum/checksum.go:83`'s RPC
+              // body): stream the region file through the CRC64 monoid
+              // locally and answer with the triple — 24 bytes regardless
+              // of region size
+              val c = client.checksumRegion(id)
+              out.writeByte(1)
+              out.writeLong(c.crc64_xor); out.writeLong(c.total_kvs); out.writeLong(c.total_bytes)
+            case None => out.writeByte(0)
+          }
         case put if put.startsWith("PUT ") =>
           putRequests.incrementAndGet()
           // a PUT stream's pace is the WRITING TASK's pace — a skewed
@@ -362,7 +368,7 @@ class KVBinServer(dir: String, conf: Configuration,
           // commit guard could refuse. jobTag uniqueness makes accidental
           // collision unlikely; the lost-ack rationale documented on
           // ABORT applies equally here, so refuse with byte 0. Served
-          // from the fingerprint-guarded index cache first, BUT an
+          // from the fingerprint-guarded served client first, BUT an
           // absent name forces one FRESH index read before the
           // destructive fs.create: the (len, mtime) fingerprint has a
           // stale window on filesystems whose setTimes is a no-op (an
@@ -370,14 +376,19 @@ class KVBinServer(dir: String, conf: Configuration,
           // e.g. a compaction — would otherwise serve a set missing a
           // just-committed region, r15 advice). A PUT spools a whole
           // segment, so the extra index read on its miss path is
-          // noise; META/REGIONS/SCAN stay on the cache's hot path.
+          // noise; META/REGIONS/SCAN stay on the served client's hot
+          // path. ALL referenced names count, UNFILTERED by the read
+          // scope `owns`: a shared-dir fleet sibling's region is just
+          // as live.
+          def referenced(): Set[String] =
+            current().listRegions().map(_.id).toSet
           val putReferenced: Set[String] =
             try {
-              val cached = referencedNames
+              val cached = referenced()
               if (cached(nm)) cached
               else {
-                idxLock.synchronized { idxFp = null }
-                referencedNames
+                idxLock.synchronized { served = null }
+                referenced()
               }
             } catch { case _: java.io.FileNotFoundException => Set.empty }
           if (KVBinDataWriter.RegionFile.matches(nm) && !putReferenced(nm)) {
@@ -428,35 +439,19 @@ class KVBinServer(dir: String, conf: Configuration,
         case "COMMIT" =>
           commitRequests.incrementAndGet()
           val truncate = in.readByte() == 1
-          val apiVersion = Option(new String(readBytes(in), "UTF-8"))
-            .filter(_.nonEmpty)
+          val apiVersion = Option(readString(in)).filter(_.nonEmpty)
           val preserveMeta = in.readByte() == 1
           val deferSweep = in.readByte() == 1
-          val stats = (0 until in.readInt()).map { _ =>
-            (new String(readBytes(in), "UTF-8"),
-              new String(readBytes(in), "UTF-8"))
-          }
-          val userMeta = (0 until in.readInt()).map { _ =>
-            (new String(readBytes(in), "UTF-8"),
-              new String(readBytes(in), "UTF-8"))
-          }.toMap
-          val plannedGen = Option(new String(readBytes(in), "UTF-8"))
-            .filter(_.nonEmpty)
-          val plannedTid = Option(new String(readBytes(in), "UTF-8"))
-            .filter(_.nonEmpty)
+          val stats = readPairs(in)
+          val userMeta = readPairs(in).toMap
+          val plannedGen = Option(readString(in)).filter(_.nonEmpty)
+          val plannedTid = Option(readString(in)).filter(_.nonEmpty)
           // r14: the DRIVER may assign the fresh table's table_id — a
           // fleet write commits per store, and the stores of one fleet
           // table must share ONE identity or the fleet read's
           // consistency gate (mergeMetas) would refuse its own table
-          val assignedTid = Option(new String(readBytes(in), "UTF-8"))
-            .filter(_.nonEmpty)
-          val fresh = (0 until in.readInt()).map { _ =>
-            val f = new String(readBytes(in), "UTF-8")
-            val mn = readBytes(in); val mx = readBytes(in)
-            val n = in.readLong()
-            val pairs = Seq.fill(in.readInt())((in.readLong(), in.readLong()))
-            KVBinCommit.Fresh(f, mn, mx, n, pairs.map(_._1), pairs.map(_._2))
-          }
+          val assignedTid = Option(readString(in)).filter(_.nonEmpty)
+          val fresh = Seq.fill(in.readInt())(readRegion(in))
           try {
             if (refuseCommits.get)
               throw new IllegalStateException(
@@ -466,13 +461,13 @@ class KVBinServer(dir: String, conf: Configuration,
             // enforcement of the OWNS contract (a mis-routed PUT's file
             // never reaches an index; the next sweep reclaims it)
             ownsRange.foreach { case (lo, hi) =>
-              fresh.filter(_.n > 0).foreach { f =>
-                val below = lo.nonEmpty && KVBin.compare(f.min, lo) < 0
-                val above = hi.nonEmpty && KVBin.compare(f.max, hi) >= 0
+              fresh.filter(_.nKeys > 0).foreach { f =>
+                val below = lo.nonEmpty && KVBin.compare(f.minKey, lo) < 0
+                val above = hi.nonEmpty && KVBin.compare(f.maxKey, hi) >= 0
                 if (below || above)
                   throw new IllegalArgumentException(
-                    s"kvbin wire COMMIT at $dir: region ${f.file} spans " +
-                    s"[${KVBin.hexOf(f.min)}, ${KVBin.hexOf(f.max)}] outside " +
+                    s"kvbin wire COMMIT at $dir: region ${f.id} spans " +
+                    s"[${KVBin.hexOf(f.minKey)}, ${KVBin.hexOf(f.maxKey)}] outside " +
                     s"this store's owned range [${KVBin.hexOf(lo)}, " +
                     s"${KVBin.hexOf(hi)}) — route keys to their owner store")
               }
@@ -482,7 +477,7 @@ class KVBinServer(dir: String, conf: Configuration,
             // ('_index', a path-traversing name) must never reach the
             // index — readers would resolve it against the directory
             // and the sweep would reason over a foreign entry
-            fresh.map(_.file).find(f =>
+            fresh.map(_.id).find(f =>
                 !KVBinDataWriter.RegionFile.matches(f)).foreach(f =>
               throw new IllegalArgumentException(
                 s"kvbin wire COMMIT names '$f' — not a region attempt " +
@@ -521,8 +516,7 @@ class KVBinServer(dir: String, conf: Configuration,
           } catch {
             case scala.util.control.NonFatal(e) =>
               out.writeByte(0)
-              writeBytes(out,
-                Option(e.getMessage).getOrElse(e.toString).getBytes("UTF-8"))
+              writeString(out, Option(e.getMessage).getOrElse(e.toString))
           }
         case "ABORT" =>
           val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -535,10 +529,10 @@ class KVBinServer(dir: String, conf: Configuration,
           // committed generation survives, exactly like the filesystem
           // path where abort() only ever touches UNreferenced attempts.
           val referenced: Set[String] =
-            try KVBin.readIndex(dir, conf).map(_._1).toSet
+            try KVBin.readIndex(dir, conf).map(_.id).toSet
             catch { case _: java.io.FileNotFoundException => Set.empty }
           (0 until in.readInt()).foreach { _ =>
-            val nm = new String(readBytes(in), "UTF-8")
+            val nm = readString(in)
             // same naming discipline as the sweep: only our own pattern
             if (KVBinDataWriter.RegionFile.matches(nm) && !referenced(nm))
               fs.delete(new org.apache.hadoop.fs.Path(dir, nm), false)
@@ -597,45 +591,24 @@ class SocketRegionClient(address: String) extends RegionClient {
   }
 
   override def clusterMeta(): Map[String, String] =
-    dial("META") { in =>
-      (0 until in.readInt()).map { _ =>
-        (new String(readBytes(in), "UTF-8"), new String(readBytes(in), "UTF-8"))
-      }.toMap
-    }
+    dial("META")(readPairs(_).toMap)
 
   /** One POLL round-trip: scalar meta only — the per-trigger poll of a
     * wire tail moves a handful of key/value pairs regardless of how
     * many regions (or generations) the table has accumulated. */
-  override def pollMeta(): Map[String, String] =
-    dial("POLL") { in =>
-      (0 until in.readInt()).map { _ =>
-        (new String(readBytes(in), "UTF-8"), new String(readBytes(in), "UTF-8"))
-      }.toMap
-    }
+  override def pollMeta(): Map[String, String] = pollMetaAndOwns()._1
 
   /** POLL's full reply: scalar meta AND the store's owned write range
     * in one round-trip — the fleet replication sink's per-batch probe
     * (marker + ownership) at one dial per store instead of two. */
   def pollMetaAndOwns(): (Map[String, String], Option[(Array[Byte], Array[Byte])]) =
     dial("POLL") { in =>
-      val meta = (0 until in.readInt()).map { _ =>
-        (new String(readBytes(in), "UTF-8"), new String(readBytes(in), "UTF-8"))
-      }.toMap
-      val owns =
-        if (in.readByte() == 1) Some((readBytes(in), readBytes(in))) else None
-      (meta, owns)
+      val meta = readPairs(in).toMap
+      (meta, readOwns(in))
     }
 
   override def listRegions(): Seq[RegionInfo] =
-    dial("REGIONS") { in =>
-      (0 until in.readInt()).map { _ =>
-        val id = new String(readBytes(in), "UTF-8")
-        val mn = readBytes(in); val mx = readBytes(in)
-        val n = in.readLong(); val bytes = in.readLong()
-        val stats = Seq.fill(in.readInt())((in.readLong(), in.readLong()))
-        RegionInfo(id, mn, mx, n, bytes, stats)
-      }
-    }
+    dial("REGIONS")(in => Seq.fill(in.readInt())(readRegion(in)))
 
   /** Streams the region fully into the task (regions are bounded by the
     * writer's range split — the same contract the file client's
@@ -668,10 +641,7 @@ class SocketRegionClient(address: String) extends RegionClient {
   /** This store's owned write key range ([min, max), empty = unbounded
     * side), or None for an unscoped single store — the OWNS probe the
     * fleet write builder routes by. */
-  def owns(): Option[(Array[Byte], Array[Byte])] =
-    dial("OWNS") { in =>
-      if (in.readByte() == 1) Some((readBytes(in), readBytes(in))) else None
-    }
+  def owns(): Option[(Array[Byte], Array[Byte])] = dial("OWNS")(readOwns)
 
   /** Ships the COMMIT frame (see the protocol doc) and raises the
     * server's refusal verbatim — the guard message names the remedy,
@@ -683,47 +653,30 @@ class SocketRegionClient(address: String) extends RegionClient {
                   preserveMeta: Boolean, stats: Seq[(String, String)],
                   deferSweep: Boolean, userMeta: Map[String, String],
                   plannedBase: Option[(String, String)],
-                  fresh: Seq[KVBinCommit.Fresh],
+                  fresh: Seq[RegionInfo],
                   assignedTableId: Option[String] = None): Unit =
     dial("COMMIT", out => {
       out.writeByte(if (truncate) 1 else 0)
-      writeBytes(out, apiVersion.getOrElse("").getBytes("UTF-8"))
+      writeString(out, apiVersion.getOrElse(""))
       out.writeByte(if (preserveMeta) 1 else 0)
       out.writeByte(if (deferSweep) 1 else 0)
-      out.writeInt(stats.size)
-      stats.foreach { case (n, sp) =>
-        writeBytes(out, n.getBytes("UTF-8"))
-        writeBytes(out, sp.getBytes("UTF-8"))
-      }
-      out.writeInt(userMeta.size)
-      userMeta.toSeq.sortBy(_._1).foreach { case (k, v) =>
-        writeBytes(out, k.getBytes("UTF-8"))
-        writeBytes(out, v.getBytes("UTF-8"))
-      }
-      writeBytes(out, plannedBase.map(_._1).getOrElse("").getBytes("UTF-8"))
-      writeBytes(out, plannedBase.map(_._2).getOrElse("").getBytes("UTF-8"))
-      writeBytes(out, assignedTableId.getOrElse("").getBytes("UTF-8"))
+      writePairs(out, stats)
+      writePairs(out, userMeta.toSeq.sortBy(_._1))
+      writeString(out, plannedBase.map(_._1).getOrElse(""))
+      writeString(out, plannedBase.map(_._2).getOrElse(""))
+      writeString(out, assignedTableId.getOrElse(""))
       out.writeInt(fresh.size)
-      fresh.foreach { f =>
-        writeBytes(out, f.file.getBytes("UTF-8"))
-        writeBytes(out, f.min)
-        writeBytes(out, f.max)
-        out.writeLong(f.n)
-        out.writeInt(f.lo.size)
-        f.lo.zip(f.hi).foreach { case (a, b) =>
-          out.writeLong(a); out.writeLong(b)
-        }
-      }
+      fresh.foreach(writeRegion(out, _))
     }, readTimeoutMs = 600000) { in =>
       if (in.readByte() != 1)
-        throw new IllegalStateException(new String(readBytes(in), "UTF-8"))
+        throw new IllegalStateException(readString(in))
     }
 
   /** Reclaims named attempt files of an aborted wire write job. */
   def abortWrite(files: Seq[String]): Unit =
     dial("ABORT", out => {
       out.writeInt(files.size)
-      files.foreach(f => writeBytes(out, f.getBytes("UTF-8")))
+      files.foreach(writeString(out, _))
     }, readTimeoutMs = 600000) { in =>
       if (in.readByte() != 1)
         throw new IllegalStateException(s"kvbin wire ABORT refused by $address")

@@ -154,6 +154,39 @@ object KVBinSource {
     statBounds.forall(b => !r.stats.isDefinedAt(b.i) || {
       val (mn, mx) = r.stats(b.i); mx >= b.lo && mn <= b.hi
     })
+
+  /** Packs regions into input partitions by Spark's file-source split
+    * rule: a region weighs its bytes (or 64 B per record when the client
+    * cannot size it) plus `spark.sql.files.openCostInBytes`, and a bin
+    * closes before the region that would take it past
+    * `FilePartition.maxSplitBytes` — `maxPartitionBytes`, lowered so the
+    * table spreads over `spark.sql.files.minPartitionNum` (default: the
+    * leaf-node parallelism). A bin over the cap holds one region. Unlike
+    * the file source, bins fill in KEY order (by `minKey`, stable), so a
+    * partition is a contiguous key run and a plain scan returns rows in
+    * key order. Why not a task per region: a Spark task has a fixed
+    * cost (scheduling, and deserializing the client's hadoop conf) that
+    * a small region's scan does not come near. The batch scan and the
+    * micro-batch stream both plan through it. */
+  def packed(spark: org.apache.spark.sql.SparkSession,
+             regions: Seq[RegionInfo]): Seq[Seq[RegionInfo]] = {
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val weighed = regions.sortBy(_.minKey)(KVBin.keyOrder)
+      .map(r => (r, r.sizeBytes + openCost))
+    val cap = org.apache.spark.sql.execution.datasources.FilePartition
+      .maxSplitBytes(spark, weighed.map(_._2).sum)
+    val bins = Seq.newBuilder[Seq[RegionInfo]]
+    var bin = Vector.empty[RegionInfo]
+    var binBytes = 0L
+    weighed.foreach { case (r, w) =>
+      if (bin.nonEmpty && binBytes + w > cap) {
+        bins += bin; bin = Vector.empty; binBytes = 0L
+      }
+      bin :+= r; binBytes += w
+    }
+    if (bin.nonEmpty) bins += bin
+    bins.result()
+  }
 }
 
 class KVBinTable(dir: String, tableEndpoints: Option[String] = None)
@@ -503,42 +536,10 @@ class KVBinScan(dir: String, start: Array[Byte], end: Array[Byte],
     }
   }
 
-  /** Packs regions into input partitions by Spark's file-source split
-    * rule: a region weighs its bytes (or 64 B per record when the client
-    * cannot size it) plus `spark.sql.files.openCostInBytes`, and a bin
-    * closes before the region that would take it past
-    * `FilePartition.maxSplitBytes` — `maxPartitionBytes`, lowered so the
-    * table spreads over `spark.sql.files.minPartitionNum` (default: the
-    * leaf-node parallelism). A bin over the cap holds one region. Unlike
-    * the file source, bins fill in KEY order (by `minKey`, stable), so a
-    * partition is a contiguous key run and a plain scan returns rows in
-    * key order. Why not a task per region: a Spark task has a fixed
-    * cost (scheduling, and deserializing the client's hadoop conf) that
-    * a small region's scan does not come near. */
-  private def packed(regions: Seq[RegionInfo]): Seq[Seq[RegionInfo]] = {
-    val spark = session
-    val openCost = spark.sessionState.conf.filesOpenCostInBytes
-    val weighed = regions.sortBy(_.minKey)(KVBin.keyOrder)
-      .map(r => (r, r.sizeBytes + openCost))
-    val cap = org.apache.spark.sql.execution.datasources.FilePartition
-      .maxSplitBytes(spark, weighed.map(_._2).sum)
-    val bins = Seq.newBuilder[Seq[RegionInfo]]
-    var bin = Vector.empty[RegionInfo]
-    var binBytes = 0L
-    weighed.foreach { case (r, w) =>
-      if (bin.nonEmpty && binBytes + w > cap) {
-        bins += bin; bin = Vector.empty; binBytes = 0L
-      }
-      bin :+= r; binBytes += w
-    }
-    if (bin.nonEmpty) bins += bin
-    bins.result()
-  }
-
   /** Region pruning, then packing: only regions whose [min,max]
     * intersects the pushed range (and whose stat box meets the pushed
     * stat ranges, and that hold a runtime key) are kept, and
-    * [[packed]] groups the survivors into input partitions. The
+    * [[KVBinSource.packed]] groups the survivors into input partitions. The
     * API-version gate runs first — a mismatched cluster fails the query
     * at planning time, before any region file is opened
     * (`checksum/checksum.go:134-137` analog). */
@@ -561,13 +562,13 @@ class KVBinScan(dir: String, start: Array[Byte], end: Array[Byte],
       case Some(cols) =>
         require(start == null && end == null && endIncl == null,
           "kvbin pushed aggregate planned with a pushed key range")
-        packed(prunedRegions.filter(_.nKeys > 0)).map { bin =>
+        KVBinSource.packed(session, prunedRegions.filter(_.nKeys > 0)).map { bin =>
           KVBinAggInputPartition(bin.map(_.nKeys).sum,
             bin.map(_.minKey).min(KVBin.keyOrder),
             bin.map(_.maxKey).max(KVBin.keyOrder), cols): InputPartition
         }.toArray
       case None =>
-        packed(prunedRegions).map { bin =>
+        KVBinSource.packed(session, prunedRegions).map { bin =>
           KVBinInputPartition(client, bin.map(_.id), start, end, endIncl,
             required.fieldNames, limit.getOrElse(-1),
             statDefs.toMap, statBounds): InputPartition
@@ -668,9 +669,10 @@ object KVBinOffsets {
 /** Tails a kvbin table as micro-batches. Each poll re-reads the region
   * index through a FRESH [[RegionClient]] (the scan-time client caches
   * the index for plan stability — a tailing source must see appends);
-  * pushed key ranges and stat bounds prune each batch's NEW regions
-  * exactly like the batch scan, and pruned-away regions still advance
-  * the offset so they are never re-considered. The API-version gate
+  * pushed key ranges and stat bounds prune each batch's NEW regions,
+  * and [[KVBinSource.packed]] packs them, exactly like the batch scan;
+  * pruned-away regions still advance the offset so they are never
+  * re-considered. The API-version gate
   * runs on every poll: an append cannot change the stamp (the writer
   * refuses), but a table REPLACED under the stream with a different
   * version must kill the query, not feed it mixed-version bytes.
@@ -915,9 +917,10 @@ class KVBinMicroBatchStream(dir: String, start: Array[Byte],
         // AHEAD of endO (another append landed) — those wait their turn
         regions.filter(r => target.contains(r.id) && !seen.contains(r.id))
     }
-    due.filter(KVBinSource.inScope(_, start, end, endIncl, statBounds))
-      .map(r => KVBinInputPartition(client, Seq(r.id), start, end, endIncl,
-        required.fieldNames, -1, statDefs.toMap, statBounds): InputPartition)
+    KVBinSource.packed(org.apache.spark.sql.SparkSession.active,
+        due.filter(KVBinSource.inScope(_, start, end, endIncl, statBounds)))
+      .map(bin => KVBinInputPartition(client, bin.map(_.id), start, end,
+        endIncl, required.fieldNames, -1, statDefs.toMap, statBounds): InputPartition)
       .toArray
   }
 

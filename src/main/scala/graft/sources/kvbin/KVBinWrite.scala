@@ -28,7 +28,7 @@ import org.apache.spark.util.SerializableConfiguration
   *    Hadoop FS API on EXECUTORS (file:// locally, HDFS/object stores
   *    on a cluster) into an attempt-unique file name, so speculative or
   *    retried tasks can never collide; only COMMITTED tasks' messages
-  *    (file, min, max, count) reach the driver — bytes never do.
+  *    (one [[RegionInfo]] each) reach the driver — bytes never do.
   *  - `commit()` is the visibility point: it writes the `_index`
   *    sidecar from the committed messages (the reader's only source of
   *    truth — uncommitted attempt files are invisible to planning), then
@@ -277,15 +277,10 @@ class KVBinWrite(placement: String, ranges: Int, batch: => BatchWrite)
     Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)
 }
 
-case class KVBinCommitMessage(file: String, minHex: String, maxHex: String,
-                              count: Long, statLo: Seq[Long] = Nil,
-                              statHi: Seq[Long] = Nil) extends WriterCommitMessage {
-  /** The region this message publishes; None for an empty task. */
-  def fresh: Option[KVBinCommit.Fresh] =
-    if (count > 0) Some(KVBinCommit.Fresh(file, KVBin.unhex(minHex),
-      KVBin.unhex(maxHex), count, statLo, statHi))
-    else None
-}
+/** One task's manifest: the region it wrote (`bytes = -1`). An empty
+  * task publishes `nKeys = 0` and no region, but its name still rides
+  * along for `abort`. */
+case class KVBinCommitMessage(region: RegionInfo) extends WriterCommitMessage
 
 class KVBinBatchWrite(dir: String, truncate: Boolean,
                       apiVersion: Option[String], preserveMeta: Boolean,
@@ -323,7 +318,8 @@ class KVBinBatchWrite(dir: String, truncate: Boolean,
       stats.map(_._2))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.toSeq.collect { case m: KVBinCommitMessage => m.fresh }.flatten
+    val fresh = messages.toSeq.collect {
+      case KVBinCommitMessage(r) if r.nKeys > 0 => r }
     KVBinCommit.commit(dir, conf.value, truncate, apiVersion, preserveMeta,
       stats, deferSweep, userMeta, fresh,
       assignedTableId = assignTid,
@@ -339,8 +335,8 @@ class KVBinBatchWrite(dir: String, truncate: Boolean,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val fs = FileSystem.get(new java.net.URI(dir), conf.value)
-    messages.collect { case m: KVBinCommitMessage =>
-      fs.delete(new Path(dir, m.file), false)
+    messages.collect { case KVBinCommitMessage(r) =>
+      fs.delete(new Path(dir, r.id), false)
     }
   }
 }
@@ -356,9 +352,6 @@ class KVBinBatchWrite(dir: String, truncate: Boolean,
   * (filesystem: the planning-time (len, mtime) fingerprint; wire: the
   * planning-time (generation, table_id) pair the client shipped). */
 object KVBinCommit {
-  case class Fresh(file: String, min: Array[Byte], max: Array[Byte],
-                   n: Long, lo: Seq[Long], hi: Seq[Long])
-
   /** In-band carrier for the force-generation-bump flag: rides the
     * existing userMeta plumbing (constructors, the wire COMMIT frame)
     * and is STRIPPED here before the meta header is built — it never
@@ -374,7 +367,7 @@ object KVBinCommit {
              truncate: Boolean, apiVersion: Option[String],
              preserveMeta: Boolean, stats: Seq[(String, String)],
              deferSweep: Boolean, userMetaIn: Map[String, String],
-             freshIn: Seq[Fresh], preSwapCheck: () => Unit,
+             fresh: Seq[RegionInfo], preSwapCheck: () => Unit,
              assignedTableId: Option[String] = None): Unit = {
     val forceGenBump = userMetaIn.get(ForceGenBumpKey).exists(_.toBoolean)
     val userMeta = userMetaIn - ForceGenBumpKey
@@ -384,18 +377,8 @@ object KVBinCommit {
     assignedTableId.foreach(t => require(t.matches("[0-9a-fA-F-]+"),
       s"kvbin assigned table_id must be hex-dash shaped, got '$t'"))
     val fs = FileSystem.get(new java.net.URI(dir), conf)
-    val fresh = freshIn.map(f => (f.file, f.min, f.max, f.n, f.lo, f.hi))
-    val idxPath = new Path(dir, KVBin.IndexFile)
-    val appending = !truncate && fs.exists(idxPath)
-    // old entries keep their stamped stat ranges through the merge
-    val oldRanges: Map[String, Seq[(Long, Long)]] =
-      if (appending && stats.nonEmpty) KVBin.statRanges(dir, conf)
-      else Map.empty
-    val old: Seq[(String, Array[Byte], Array[Byte], Long, Seq[Long], Seq[Long])] =
-      if (appending) KVBin.readIndex(dir, conf).map { case (f, mn, mx, n) =>
-        val r = oldRanges.getOrElse(f, Nil)
-        (f, mn, mx, n, r.map(_._1), r.map(_._2))
-      } else Seq.empty
+    val indexed = fs.exists(new Path(dir, KVBin.IndexFile))
+    val appending = !truncate && indexed
     // append preserves the EXISTING table's metadata: the api_version
     // stamp must not silently change under an append (the read-side
     // version gate keys off it), so a conflicting writer option is an
@@ -403,10 +386,15 @@ object KVBinCommit {
     // An OVERWRITE with `preserve_meta` (the compaction path) also
     // carries the extra meta lines through its one atomic index swap —
     // but keeps the overwrite's right to change api_version
-    val keepOldMeta = appending ||
-      (preserveMeta && fs.exists(idxPath))
-    val oldMeta: Map[String, String] =
-      if (keepOldMeta) KVBin.readMeta(dir, conf) else Map.empty
+    // ONE index read serves the old meta and the old entries
+    val (oldMeta, oldIndex) =
+      if (appending || (preserveMeta && indexed)) KVBin.readIndexFile(dir, conf)
+      else (Map.empty[String, String], Nil)
+    // old entries keep their stamped stat ranges through a stats append
+    val old =
+      if (!appending) Nil
+      else if (stats.nonEmpty) oldIndex
+      else oldIndex.map(_.copy(stats = Nil))
     val version = (apiVersion, oldMeta.get("api_version")) match {
       case (Some(w), Some(e)) if appending =>
         require(w == e, s"kvbin append with api_version=$w onto a $e table " +
@@ -448,7 +436,7 @@ object KVBinCommit {
     // overwrite is a NEW table: generation restarts at 1 under a fresh
     // table_id, which is what lets an epoch checkpoint detect the
     // replacement (the role the name set played for legacy tables).
-    val freshFiles = fresh.map(_._1)
+    val freshFiles = fresh.map(_.id)
     val isGenKey = (k: String) =>
       k == "generation" || k == "compacted_through" || k.startsWith("gen.")
     val genMeta: Map[String, String] =
@@ -486,14 +474,9 @@ object KVBinCommit {
       (if (stats.nonEmpty)
          Map("stats" -> stats.map { case (n2, sp) => s"$n2:$sp" }.mkString(","))
        else Map.empty) ++ genMeta ++ userMeta
-    val merged = (old ++ fresh).sortWith((a, b) => KVBin.compare(a._2, b._2) < 0)
+    val merged = (old ++ fresh).sortWith((a, b) => KVBin.compare(a.minKey, b.minKey) < 0)
     // scalar headers first, gen.* file lists last (readPollMeta's order)
-    val lines = KVBin.headerLines(meta) ++
-      merged.map { case (f, mn, mx, n, lo, hi) =>
-        (Seq(f, KVBin.hexOf(mn), KVBin.hexOf(mx), n.toString) ++
-          lo.zip(hi).flatMap { case (a, b) => Seq(a.toString, b.toString) })
-          .mkString("\t")
-      }
+    val lines = KVBin.headerLines(meta) ++ merged.map(KVBin.regionLine)
     // the index write is the visibility point: readers plan ONLY from
     // _index, so attempt files become part of the table here and not
     // before; after the swap, drop region files the index no longer
@@ -518,7 +501,7 @@ object KVBinCommit {
     // a compaction under a RUNNING tail wants; the default immediate
     // sweep stays right for batch rewrites with no concurrent readers.
     if (!deferSweep) {
-      val live = merged.map(_._1).toSet + KVBin.IndexFile
+      val live = merged.map(_.id).toSet + KVBin.IndexFile
       fs.listStatus(new Path(dir)).map(_.getPath)
         .filter(p => KVBinDataWriter.RegionFile.matches(p.getName))
         .filterNot(p => live.contains(p.getName))
@@ -602,11 +585,10 @@ abstract class KVBinRegionWriter(partitionId: Int, statSpecs: Seq[String])
     java.util.Arrays.fill(sHi, Long.MinValue)
   }
 
-  /** The current region's manifest, published under `file`. */
-  protected final def regionMessage(file: String): KVBinCommitMessage =
-    KVBinCommitMessage(file,
-      if (n == 0) "" else KVBin.hexOf(minK),
-      if (n == 0) "" else KVBin.hexOf(prevK), n, sLo.toSeq, sHi.toSeq)
+  /** The current region's manifest entry, published under `file`. */
+  protected final def region(file: String): RegionInfo =
+    if (n == 0) RegionInfo(file, Array.emptyByteArray, Array.emptyByteArray, 0L)
+    else RegionInfo(file, minK, prevK, n, stats = sLo.toSeq.zip(sHi))
 
   override final def write(row: InternalRow): Unit = {
     val k = row.getBinary(0)
@@ -653,7 +635,7 @@ class KVBinDataWriter(dir: String, conf: SerializableConfiguration,
 
   override def commit(): WriterCommitMessage = {
     if (out != null) out.close()
-    regionMessage(name)
+    KVBinCommitMessage(region(name))
   }
 
   override def abort(): Unit = {
@@ -752,7 +734,8 @@ class KVBinWireBatchWrite(address: String, truncate: Boolean,
       KVBinDataWriter.jobTag(queryId), stats.map(_._2))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.toSeq.collect { case m: KVBinCommitMessage => m.fresh }.flatten
+    val fresh = messages.toSeq.collect {
+      case KVBinCommitMessage(r) if r.nKeys > 0 => r }
     new SocketRegionClient(address).commitWrite(truncate, apiVersion,
       preserveMeta, stats, deferSweep, userMeta, plannedBase, fresh,
       assignTid)
@@ -760,7 +743,7 @@ class KVBinWireBatchWrite(address: String, truncate: Boolean,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     new SocketRegionClient(address).abortWrite(
-      messages.collect { case m: KVBinCommitMessage => m.file }.toSeq)
+      messages.collect { case KVBinCommitMessage(r) => r.id }.toSeq)
 }
 
 class KVBinWireWriterFactory(address: String, jobTag: String,
@@ -792,15 +775,15 @@ class KVBinWireDataWriter(address: String, jobTag: String,
 
   override def commit(): WriterCommitMessage = {
     if (put != null) put.finish()
-    regionMessage(name)
+    KVBinCommitMessage(region(name))
   }
 
   override def abort(): Unit = if (put != null) put.abort()
 }
 
-/** One task's fleet manifest: the acked (storeIdx, segment manifest)
+/** One task's fleet manifest: the acked (storeIdx, segment region)
   * pairs, in key order. */
-case class KVBinFleetCommitMessage(segments: Seq[(Int, KVBinCommitMessage)])
+case class KVBinFleetCommitMessage(segments: Seq[(Int, RegionInfo)])
     extends WriterCommitMessage
 
 /** SHARDED fleet wire write (r14) — the multi-store twin of
@@ -968,19 +951,19 @@ class KVBinFleetWireBatchWrite(stores: IndexedSeq[KVBinFleet.Store],
   // keep the adopted store's OLD shard beside the rest of the fleet's
   // NEW data — converged generations over diverged content, invisible
   // to the read-side gates (r15 advice).
-  private def shardFp(fresh: Seq[KVBinCommit.Fresh]): String =
+  private def shardFp(fresh: Seq[RegionInfo]): String =
     if (fresh.isEmpty) "0" else {
-      val rows = fresh.map(_.n).sum
-      val mn = fresh.map(f => KVBin.hexOf(f.min)).min
-      val mx = fresh.map(f => KVBin.hexOf(f.max)).max
+      val rows = fresh.map(_.nKeys).sum
+      val mn = fresh.map(f => KVBin.hexOf(f.minKey)).min
+      val mx = fresh.map(f => KVBin.hexOf(f.maxKey)).max
       s"$rows:$mn:$mx"
     }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val perStore: Map[Int, Seq[KVBinCommit.Fresh]] = messages.toSeq
+    val perStore: Map[Int, Seq[RegionInfo]] = messages.toSeq
       .collect { case m: KVBinFleetCommitMessage => m.segments }
       .flatten
-      .flatMap { case (i, m) => m.fresh.map(i -> _) }
+      .filter(_._2.nKeys > 0)
       .groupMap(_._1)(_._2)
     // PREPARE: every store reachable and (appends) still at its planned
     // base — no COMMIT is issued anywhere until the whole fleet passes,
@@ -1039,7 +1022,7 @@ class KVBinFleetWireBatchWrite(stores: IndexedSeq[KVBinFleet.Store],
       val freshHere = perStore.getOrElse(i, Nil)
       if (adopted(i)) {
         try new SocketRegionClient(st.address)
-          .abortWrite(freshHere.map(_.file))
+          .abortWrite(freshHere.map(_.id))
         catch { case scala.util.control.NonFatal(_) => () }
       } else if (anyFresh || truncate || plannedBases(i).isEmpty) {
         val bump =
@@ -1069,7 +1052,7 @@ class KVBinFleetWireBatchWrite(stores: IndexedSeq[KVBinFleet.Store],
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.toSeq.collect { case m: KVBinFleetCommitMessage => m.segments }
-      .flatten.groupMap(_._1)(_._2.file)
+      .flatten.groupMap(_._1)(_._2.id)
       .foreach { case (i, files) =>
         // best-effort per store: the abort often RUNS because a store
         // died — its attempt files die unreachable, and failing the
@@ -1105,8 +1088,7 @@ class KVBinFleetWireDataWriter(stores: IndexedSeq[KVBinFleet.Store],
   private var storeIdx = 0
   private var seg = 0
   private var put: KVBinPut = _
-  private val acked =
-    scala.collection.mutable.Buffer.empty[(Int, KVBinCommitMessage)]
+  private val acked = scala.collection.mutable.Buffer.empty[(Int, RegionInfo)]
 
   override protected def streamFor(k: Array[Byte]): DataOutputStream = {
     val owner = KVBinFleet.ownerFrom(stores, storeIdx, k)
@@ -1122,7 +1104,7 @@ class KVBinFleetWireDataWriter(stores: IndexedSeq[KVBinFleet.Store],
 
   private def closeSegment(): Unit = if (put != null) {
     put.finish()
-    acked += ((storeIdx, regionMessage(put.name)))
+    acked += ((storeIdx, region(put.name)))
     seg += 1
     put = null
   }
@@ -1136,7 +1118,7 @@ class KVBinFleetWireDataWriter(stores: IndexedSeq[KVBinFleet.Store],
     // open segment: no terminator — the server's PUT loop hits EOF and
     // deletes the partial file; acked segments: reclaim by name
     if (put != null) put.abort()
-    acked.groupMap(_._1)(_._2.file).foreach { case (i, files) =>
+    acked.groupMap(_._1)(_._2.id).foreach { case (i, files) =>
       try new SocketRegionClient(stores(i).address).abortWrite(files.toSeq)
       catch { case scala.util.control.NonFatal(_) => () }
     }

@@ -4,12 +4,21 @@ import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.RawChecksum
 
-/** One region's placement metadata: id (the scan handle), key bounds,
-  * record count, serialized byte size — what a PD `GetAllRegions` row
-  * carries (`checksum/checksum.go:52-57`'s region enumeration; PD's
-  * `approximate_size` is the `bytes` analog). `bytes = -1` means the
-  * client cannot cheaply know it (in-memory test clients); consumers
-  * read [[sizeBytes]], which falls back to a per-record estimate. */
+/** One region entry — the only shape the kvbin layer records a region
+  * in: id (the region file name and scan handle), key bounds, record
+  * count, serialized byte size and stamped stat [min, max] ranges (in
+  * `#stats` header order) — what a PD `GetAllRegions` row carries
+  * (`checksum/checksum.go:52-57`'s region enumeration; PD's
+  * `approximate_size` is the `bytes` analog). The same value is
+  *  - an `_index` line ([[KVBin.readIndex]], [[KVBin.regionLine]]);
+  *  - the commit manifest a write task publishes ([[KVBinCommitMessage]],
+  *    with `bytes = -1`: the writer does not size its file);
+  *  - the REGIONS and COMMIT wire frame ([[KVBinNet.writeRegion]]);
+  *  - what planning, pruning and packing consume.
+  * `bytes = -1` means the producer cannot cheaply know it (a commit
+  * manifest, an index read without a file listing, an in-memory test
+  * client); consumers read [[sizeBytes]], which falls back to a
+  * per-record estimate. */
 case class RegionInfo(id: String, minKey: Array[Byte], maxKey: Array[Byte],
                       nKeys: Long, bytes: Long = -1L,
                       stats: Seq[(Long, Long)] = Nil) {
@@ -83,35 +92,31 @@ object RegionClient {
 }
 
 /** Region files + index sidecar on a Hadoop filesystem. The index is
-  * read once per planning pass (cached lazily, driver-side); executors
-  * deserialize only (dir, conf) and stream their one region file. */
+  * read once per client (lazily, driver-side), and so is the listing
+  * that sizes the regions; executors deserialize only (dir, conf) and
+  * stream their one region file. [[KVBinServer]] serves through one of
+  * these, replaced whenever the `_index` changes. */
 class FileRegionClient(dir: String, conf: SerializableConfiguration)
     extends RegionClient {
-  // ONE index read per client for meta + entries + stat ranges — a
-  // separate statRanges read could straddle an index swap and pair one
-  // generation's rows with another's ranges
-  @transient private lazy val snapshot = KVBin.readAllWithRanges(dir, conf.value)
-  @transient private lazy val all = (snapshot._1, snapshot._2)
-  /** Region file lengths, one listStatus (the serialized-size stat a
-    * planner consumes; framing included, like PD's approximate_size). */
-  @transient private lazy val fileLens: Map[String, Long] = {
+  // ONE index read per client for meta + regions (stat ranges included)
+  @transient private lazy val index = KVBin.readIndexFile(dir, conf.value)
+  /** Index entries sized by their file lengths, one listStatus (the
+    * serialized-size stat a planner consumes; framing included, like
+    * PD's approximate_size). */
+  @transient private lazy val regions: Seq[RegionInfo] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), conf.value)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+    val lens = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .map(st => st.getPath.getName -> st.getLen).toMap
+    index._2.map(r => r.copy(bytes = lens.getOrElse(r.id, -1L)))
   }
-  @transient private lazy val ranges: Map[String, Seq[(Long, Long)]] =
-    if (snapshot._1.contains("stats")) snapshot._3 else Map.empty
-  override def clusterMeta(): Map[String, String] = all._1
+  override def clusterMeta(): Map[String, String] = index._1
   /** The poll path never touches the index body (or the gen.* lists):
     * a fresh client per poll would otherwise pay a full O(regions)
     * index read per trigger on a quiet tail. */
   override def pollMeta(): Map[String, String] =
     KVBin.readPollMeta(dir, conf.value)
-  override def listRegions(): Seq[RegionInfo] =
-    all._2.map { case (f, mn, mx, n) =>
-      RegionInfo(f, mn, mx, n, fileLens.getOrElse(f, -1L),
-        ranges.getOrElse(f, Nil))
-    }
-  override def scanRegion(regionId: String): Iterator[(Array[Byte], Array[Byte])] =
+  override def listRegions(): Seq[RegionInfo] = regions
+  override def scanRegion(regionId: String)
+      : Iterator[(Array[Byte], Array[Byte])] with java.io.Closeable =
     KVBin.readFile(dir, regionId, conf.value)
 }

@@ -190,7 +190,7 @@ class ChecksumSpec extends SparkTestBase {
       try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
     }
     val index = bytesOf(new Path(b, KVBin.IndexFile))
-    val region = new Path(b, KVBin.readIndex(b, conf).head._1)
+    val region = new Path(b, KVBin.readIndex(b, conf).head.id)
     val flipped = bytesOf(region)
     flipped(flipped.length - 1) = (flipped.last ^ 1).toByte
     val out = fs.create(region, true)

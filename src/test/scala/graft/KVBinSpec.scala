@@ -74,9 +74,9 @@ class KVBinSpec extends SparkTestBase {
     // spec header survived the swap; every compacted region line
     // carries a RESTAMPED [min,max] pair (not dropped)
     assert(KVBin.statDefs(KVBin.readMeta(dir, conf)) === Seq(("m37", "v_be64@0")))
-    val ranges = KVBin.statRanges(dir, conf)
-    assert(ranges.size === 3 && ranges.values.forall(_.size == 1), ranges)
-    assert(ranges.values.forall { case Seq((lo, hi)) => lo >= 0 && hi <= 36 && lo <= hi })
+    val ranges = KVBin.readIndex(dir, conf).map(_.stats)
+    assert(ranges.size === 3 && ranges.forall(_.size == 1), ranges)
+    assert(ranges.forall { case Seq((lo, hi)) => lo >= 0 && hi <= 36 && lo <= hi })
     val after = KVBin.read(spark, dir)
       .select(col("key").cast("string"), col("m37"))
       .as[(String, Long)].collect().sorted.toSeq
@@ -162,7 +162,7 @@ class KVBinSpec extends SparkTestBase {
     val data = Seq(("kk".getBytes("UTF-8"), "vvv".getBytes("UTF-8"))).toDF("key", "value")
     val dir = java.nio.file.Files.createTempDirectory("kvbin-order-").toString
     KVBin.write(data, dir, 1)
-    val file = KVBin.readIndex(dir, spark.sessionState.newHadoopConf()).head._1
+    val file = KVBin.readIndex(dir, spark.sessionState.newHadoopConf()).head.id
     val sconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
     val client = new FileRegionClient(dir, sconf)
@@ -587,7 +587,7 @@ class KVBinSpec extends SparkTestBase {
     val data = Seq.tabulate(400)(i => (f"m_$i%04d".getBytes("UTF-8"),
       s"v$i".getBytes("UTF-8"))).toDF("key", "value")
     val dir = java.nio.file.Files.createTempDirectory("kvbin-multi-").toString
-    val regions = KVBin.write(data, dir, 4).map(_._1)
+    val regions = KVBin.write(data, dir, 4).map(_.id)
     assert(regions.size > 1, "fixture must split into several regions")
     def parity(id: String) = id match {
       case graft.sources.kvbin.KVBinDataWriter.RegionFile(p) => p.toLong % 2
@@ -739,7 +739,7 @@ class KVBinSpec extends SparkTestBase {
     import graft.sources.kvbin.KVBinInputPartition
     val dir = packTable("pk", 1600, 16)
     val conf = spark.sessionState.newHadoopConf()
-    val byKey = KVBin.readIndex(dir, conf).sortBy(_._2)(KVBin.keyOrder).map(_._1)
+    val byKey = KVBin.readIndex(dir, conf).sortBy(_.minKey)(KVBin.keyOrder).map(_.id)
     assert(byKey.size === 16)
     // the test session has several cores, so by default the table
     // spreads over several partitions, each a contiguous key run
@@ -932,9 +932,9 @@ class KVBinSpec extends SparkTestBase {
     val data = Seq.tabulate(400)(i => (f"rw_$i%04d".getBytes("UTF-8"),
       s"v$i".getBytes("UTF-8"))).toDF("key", "value")
     val dir = java.nio.file.Files.createTempDirectory("kvbin-rw-").toString
-    val oldNames = KVBin.write(data, dir, 4).map(_._1).toSet
+    val oldNames = KVBin.write(data, dir, 4).map(_.id).toSet
     assert(oldNames.size === 4, s"fixture must split into 4 regions: $oldNames")
-    val newNames = KVBin.write(data, dir, 2).map(_._1).toSet
+    val newNames = KVBin.write(data, dir, 2).map(_.id).toSet
     assert(newNames.size === 2)
     // a rewrite must never truncate a file the live index still names,
     // and the regions the new index drops must not outlive the swap
@@ -977,8 +977,8 @@ class KVBinSpec extends SparkTestBase {
     // where key placement would give two disjoint key ranges
     val kv = Seq.tabulate(200)(i => (f"zc_$i%04d".getBytes("UTF-8"),
       s"v$i".getBytes("UTF-8"), (i % 2).toLong)).toDF("key", "value", "__cluster")
-    def interleaved(idx: Seq[(String, Array[Byte], Array[Byte], Long)]): Boolean =
-      idx.size == 2 && KVBin.compare(idx(1)._2, idx(0)._3) < 0
+    def interleaved(idx: Seq[graft.sources.kvbin.RegionInfo]): Boolean =
+      idx.size == 2 && KVBin.compare(idx(1).minKey, idx(0).maxKey) < 0
     val dir = java.nio.file.Files.createTempDirectory("kvbin-zc-").toString
     assert(interleaved(KVBin.write(kv, dir, 2)))
     assert(!interleaved(KVBin.write(kv.drop("__cluster"), dir, 2)))
@@ -990,6 +990,44 @@ class KVBinSpec extends SparkTestBase {
       assert(interleaved(KVBin.readIndex(wdir, conf)))
     } finally server.close()
     assert(KVBin.read(spark, wdir).count() === 200)
+  }
+
+  test("SCAN closes the region file when the client drops mid-scan") {
+    import graft.sources.kvbin.KVBinServer
+    import scala.jdk.CollectionConverters._
+    val fdDir = new java.io.File("/proc/self/fd")
+    assume(fdDir.isDirectory, "counts open descriptors through /proc")
+    val dir = java.nio.file.Files.createTempDirectory("kvbin-drop-").toString
+    // one region far larger than the loopback socket buffers: the
+    // server is still writing it when the client goes away
+    val value = new Array[Byte](64 << 10)
+    val kv = Seq.tabulate(512)(i => (f"dr_$i%04d".getBytes("UTF-8"), value))
+      .toDF("key", "value")
+    val id = KVBin.write(kv, dir, 1).head.id
+    val region = new java.io.File(dir, id).getCanonicalPath
+    def openFds(): Int = Option(fdDir.listFiles).toSeq.flatten.count(f =>
+      scala.util.Try(java.nio.file.Files.readSymbolicLink(f.toPath).toString)
+        .toOption.contains(region))
+    def serveThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == "kvbin-serve").toSet
+    val server = new KVBinServer(dir, spark.sessionState.newHadoopConf())
+    try {
+      val before = serveThreads()
+      val Array(host, port) = server.address.split(":", 2)
+      val sock = new java.net.Socket(host, port.toInt)
+      sock.getOutputStream.write(s"SCAN $id\n".getBytes("UTF-8"))
+      sock.getOutputStream.flush()
+      val in = new java.io.DataInputStream(sock.getInputStream)
+      val k = new Array[Byte](in.readInt()); in.readFully(k)
+      in.readFully(new Array[Byte](in.readInt()))
+      assert(new String(k, "UTF-8") === "dr_0000")
+      val serving = serveThreads() -- before
+      assert(serving.nonEmpty && openFds() === 1, "the scan holds the region open")
+      sock.close()
+      serving.foreach(_.join(30000))
+      assert(serving.forall(!_.isAlive), "the serve thread must end")
+      assert(openFds() === 0, s"region $id still open after the client left")
+    } finally server.close()
   }
 
   test("DSv2 write: overwrite roundtrip is checksum-identical; regions are disjoint sorted ranges") {
@@ -1011,8 +1049,8 @@ class KVBinSpec extends SparkTestBase {
     // contiguous non-overlapping: each region's max key sorts strictly
     // before the next region's min key (keys are unique in the snapshot)
     idx.sliding(2).foreach {
-      case Seq(x, y) => assert(KVBin.compare(x._3, y._2) < 0,
-        s"regions overlap: ${x._1} .. ${y._1}")
+      case Seq(x, y) => assert(KVBin.compare(x.maxKey, y.minKey) < 0,
+        s"regions overlap: ${x.id} .. ${y.id}")
       case _ => ()
     }
     assert(KVBin.readMeta(dir, spark.sessionState.newHadoopConf())("api_version") === "V2")
@@ -1044,7 +1082,7 @@ class KVBinSpec extends SparkTestBase {
       val idx = KVBin.readIndex(dir, conf)
       assert(idx.size === 4)
       idx.sliding(2).foreach {
-        case Seq(x, y) => assert(KVBin.compare(x._3, y._2) < 0)
+        case Seq(x, y) => assert(KVBin.compare(x.maxKey, y.minKey) < 0)
         case _ => ()
       }
       val meta = KVBin.readMeta(dir, conf)
@@ -1134,7 +1172,7 @@ class KVBinSpec extends SparkTestBase {
     try {
       parquetSrc.write.format(kvbinFmt).option("endpoints", server.address)
         .option("ranges", "2").mode("overwrite").save()
-      val committed = KVBin.readIndex(dir, conf).map(_._1)
+      val committed = KVBin.readIndex(dir, conf).map(_.id)
       assert(committed.size === 2)
       // the lost-ack scenario: the COMMIT landed, the client saw a
       // failure and aborts naming the very files the index now
@@ -1159,8 +1197,8 @@ class KVBinSpec extends SparkTestBase {
             val m = new SocketRegionClient(server.address).pollMeta()
             (m("generation"), m("table_id"))
           },
-          fresh = Seq(graft.sources.kvbin.KVBinCommit.Fresh(
-            "_index", Array[Byte](1), Array[Byte](2), 1L, Nil, Nil)))
+          fresh = Seq(graft.sources.kvbin.RegionInfo(
+            "_index", Array[Byte](1), Array[Byte](2), 1L)))
       }
       assert(e.getMessage.contains("naming pattern"), e.getMessage)
     } finally server.close()
@@ -1209,10 +1247,10 @@ class KVBinSpec extends SparkTestBase {
       val idxA = KVBin.readIndex(dirA, conf)
       val idxB = KVBin.readIndex(dirB, conf)
       assert(idxA.nonEmpty && idxB.nonEmpty)
-      idxA.foreach { case (f, _, mx, _) =>
-        assert(KVBin.compare(mx, split) < 0, s"A region $f leaks past split") }
-      idxB.foreach { case (f, mn, _, _) =>
-        assert(KVBin.compare(mn, split) >= 0, s"B region $f below split") }
+      idxA.foreach(r => assert(KVBin.compare(r.maxKey, split) < 0,
+        s"A region ${r.id} leaks past split"))
+      idxB.foreach(r => assert(KVBin.compare(r.minKey, split) >= 0,
+        s"B region ${r.id} below split"))
       // one shared identity, generation 1 on both shards
       val mA = KVBin.readMeta(dirA, conf)
       val mB = KVBin.readMeta(dirB, conf)
@@ -1272,7 +1310,7 @@ class KVBinSpec extends SparkTestBase {
   }
 
   test("fleet write hardening: scoped COMMIT refuses out-of-range manifests; routing gaps refuse loudly; overlapping fleets refuse at planning") {
-    import graft.sources.kvbin.{KVBinServer, SocketRegionClient, KVBinCommit}
+    import graft.sources.kvbin.{KVBinServer, SocketRegionClient, RegionInfo}
     val conf = spark.sessionState.newHadoopConf()
     val dir = java.nio.file.Files.createTempDirectory("kvbin-fh-").toString
     val lo = "b".getBytes("UTF-8"); val hi = "m".getBytes("UTF-8")
@@ -1286,8 +1324,8 @@ class KVBinSpec extends SparkTestBase {
           truncate = true, apiVersion = None, preserveMeta = false,
           stats = Nil, deferSweep = false, userMeta = Map.empty,
           plannedBase = None,
-          fresh = Seq(KVBinCommit.Fresh("part-00000-deadbeef-1.kv",
-            "a0".getBytes("UTF-8"), "z9".getBytes("UTF-8"), 5L, Nil, Nil)))
+          fresh = Seq(RegionInfo("part-00000-deadbeef-1.kv",
+            "a0".getBytes("UTF-8"), "z9".getBytes("UTF-8"), 5L)))
       }
       assert(e.getMessage.contains("outside") &&
         e.getMessage.contains("owned range"), e.getMessage)
@@ -1406,7 +1444,7 @@ class KVBinSpec extends SparkTestBase {
       .mode("overwrite").save()
     val conf = spark.sessionState.newHadoopConf()
     val before = Checksum.of(KVBin.read(spark, dir)).as[(Long, Long, Long)].head()
-    val oldFiles = KVBin.readIndex(dir, conf).map(_._1).toSet
+    val oldFiles = KVBin.readIndex(dir, conf).map(_.id).toSet
     assert(oldFiles.size === 8)
     // plant an extra meta header line THROUGH the Hadoop FS (a raw
     // file write would orphan the local FS's sidecar .crc): compaction
@@ -1430,7 +1468,7 @@ class KVBinSpec extends SparkTestBase {
     val left = new java.io.File(dir).list().toSet
     assert(oldFiles.forall(f => !left.contains(f)), s"old regions not swept: ${oldFiles intersect left}")
     idx.sliding(2).foreach {
-      case Seq(x, y) => assert(KVBin.compare(x._3, y._2) < 0)
+      case Seq(x, y) => assert(KVBin.compare(x.maxKey, y.minKey) < 0)
       case _ => ()
     }
     assert(KVBin.readMeta(dir, conf)("api_version") === "V2")
@@ -1558,7 +1596,8 @@ class KVBinSpec extends SparkTestBase {
       .mode("append").save()
     val e = intercept[IllegalStateException] {
       bw.commit(Array(graft.sources.kvbin.KVBinCommitMessage(
-        "part-00000-deadbeef-9.kv", "00", "ff", 1L)))
+        graft.sources.kvbin.RegionInfo("part-00000-deadbeef-9.kv",
+          KVBin.unhex("00"), KVBin.unhex("ff"), 1L))))
     }
     assert(e.getMessage.contains("concurrent writer"), e.getMessage)
     // the rival's commit survives untouched: 1 + 1 regions in the index
@@ -1639,7 +1678,7 @@ class KVBinSpec extends SparkTestBase {
     assert(o11.json().length <= len1 + 1,
       s"epoch offset grew: ${o1.json()} -> ${o11.json()}")
     val conf2 = spark.sessionState.newHadoopConf()
-    val nameSet = KVBinStreamOffset(KVBin.readIndex(dir, conf2).map(_._1))
+    val nameSet = KVBinStreamOffset(KVBin.readIndex(dir, conf2).map(_.id))
     assert(nameSet.json().length > 10 * o11.json().length,
       s"name-set offset should dwarf the epoch form: " +
       s"${nameSet.json().length} vs ${o11.json().length}")
@@ -1648,7 +1687,7 @@ class KVBinSpec extends SparkTestBase {
     val expectedDue = KVBin
       .regionGenerations(KVBin.readMeta(dir, conf2)).count(_._2 > 1L)
     assert(expectedDue >= 10)
-    assert(tail.planInputPartitions(o1, o11).length === expectedDue)
+    assert(regionsOpened(tail.planInputPartitions(o1, o11)) === expectedDue)
   }
 
   test("micro-batch planning emits only NEW regions; key range prunes per batch") {
@@ -1672,7 +1711,8 @@ class KVBinSpec extends SparkTestBase {
     val o1 = tail.latestOffset()
     val b1 = tail.planInputPartitions(
       o0, o1)
-    assert(b1.length === 3, s"base generation should plan its 3 regions, got ${b1.length}")
+    assert(regionsOpened(b1) === 3,
+      s"base generation should plan its 3 regions, got ${regionsOpened(b1)}")
     // nothing new → empty batch, not a re-read
     val o1b = tail.latestOffset()
     assert(tail.planInputPartitions(o1,
@@ -1681,8 +1721,8 @@ class KVBinSpec extends SparkTestBase {
     val o2 = tail.latestOffset()
     val b2 = tail.planInputPartitions(
       o1, o2)
-    assert(b2.length === 3,
-      s"append batch must contain ONLY the 3 new regions, got ${b2.length}")
+    assert(regionsOpened(b2) === 3,
+      s"append batch must contain ONLY the 3 new regions, got ${regionsOpened(b2)}")
     // a pushed key range prunes the appended batch's regions exactly like
     // the batch scan: the low half's range matches none of the new regions
     val pruned = stream("li_0000000000".getBytes("UTF-8"),
@@ -1810,7 +1850,7 @@ class KVBinSpec extends SparkTestBase {
         .as[String].collect().sorted.toSeq
       assert(got === expected, "fleet tail must drain both generations once")
       // every region streamed from its owner exactly once
-      val regions = KVBin.readIndex(dir, conf).map(_._1)
+      val regions = KVBin.readIndex(dir, conf).map(_.id)
       assert(even.scanRequests.get() === regions.count(parity(_) == 0).toLong)
       assert(odd.scanRequests.get() === regions.count(parity(_) == 1).toLong)
       spark.catalog.dropTempView("kvbin_fleet_tail")
@@ -1933,7 +1973,7 @@ class KVBinSpec extends SparkTestBase {
       None, None, Nil, Nil, conf)
     val tail = stream(dir)
     val o1 = tail.latestOffset()
-    assert(tail.planInputPartitions(tail.initialOffset(), o1).length === 4)
+    assert(regionsOpened(tail.planInputPartitions(tail.initialOffset(), o1)) === 4)
     // compaction of the fully-drained generation MID-TAIL: the epoch is
     // unchanged (content-identical rewrite), the next poll succeeds, and
     // the batch between the epochs is empty — no re-emission, no refusal
@@ -2054,8 +2094,8 @@ class KVBinSpec extends SparkTestBase {
     // optimization, never a correctness dependency
     val full = KVBin.readMeta(dir, conf)
     val legacyLines = full.toSeq.sortBy(_._1).map { case (k, v) => s"#$k=$v" } ++
-      KVBin.readIndex(dir, conf).map { case (f, mn, mx, n) =>
-        Seq(f, KVBin.hexOf(mn), KVBin.hexOf(mx), n.toString).mkString("\t") }
+      KVBin.readIndex(dir, conf).map(r => Seq(r.id, KVBin.hexOf(r.minKey),
+        KVBin.hexOf(r.maxKey), r.nKeys.toString).mkString("\t"))
     KVBin.writeIndexAtomic(dir, conf, legacyLines.mkString("\n"))
     val pmLegacy = KVBin.readPollMeta(dir, conf)
     assert(pmLegacy.get("generation") === Some("2"),
@@ -2165,7 +2205,7 @@ class KVBinSpec extends SparkTestBase {
       parquetSrc.limit(20).write.format(kvbinFmt)
         .option("endpoints", server.address)
         .option("ranges", "1").mode("overwrite").save()
-      val committed = KVBin.readIndex(dir, conf).map(_._1)
+      val committed = KVBin.readIndex(dir, conf).map(_.id)
       assert(committed.size === 1)
       val live = committed.head
       val crcBefore = Checksum.of(spark.read.format(kvbinFmt)
@@ -2228,7 +2268,7 @@ class KVBinSpec extends SparkTestBase {
       val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), conf)
       val idxPath = new org.apache.hadoop.fs.Path(dir, KVBin.IndexFile)
       val mtime0 = fs.getFileStatus(idxPath).getModificationTime
-      val oldName = KVBin.readIndex(dir, conf).map(_._1).head
+      val oldName = KVBin.readIndex(dir, conf).map(_.id).head
       // same-length rename: flip the character before ".kv" (keeps the
       // RegionFile shape so the PUT reaches the guard, not the
       // foreign-name refusal)
@@ -2418,7 +2458,7 @@ class KVBinSpec extends SparkTestBase {
       // .kv file on A is index-referenced (poll: serve threads async)
       val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dirA), conf)
       def stray() = {
-        val referenced = KVBin.readIndex(dirA, conf).map(_._1).toSet
+        val referenced = KVBin.readIndex(dirA, conf).map(_.id).toSet
         fs.listStatus(new org.apache.hadoop.fs.Path(dirA))
           .map(_.getPath.getName)
           .filter(f => f.endsWith(".kv") && !referenced(f)).toSeq
